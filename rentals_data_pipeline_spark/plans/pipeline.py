@@ -224,7 +224,7 @@ def run_etl(
         fixed = {c: _TYPES[t] for c, t in config["id_columns"].items()}
         wide = read_csv_typed(spark, input_csv, fixed_fields=fixed)
         result = run_pipeline(wide, config)
-        write_partitioned_parquet(
+        written = write_partitioned_parquet(
             result,
             output_path,
             partition_by=config["partition_by"],
@@ -234,7 +234,7 @@ def run_etl(
         if min_rows is not None:  # test-size override
             checks = [c for c in checks if not c.name.startswith("row_count")]
             checks.append(Q.row_count_check(min_rows))
-        out = spark.read.parquet(output_path)
+        out = spark.read.schema(written).parquet(output_path)
         return Q.run_quality_checks(out, checks)
 
     if retry_policy is None:

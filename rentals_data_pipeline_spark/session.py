@@ -10,6 +10,9 @@ plus scale-oriented defaults the reference leaves implicit:
   (``x / 0 -> NULL``) so results are stable across Spark 3/4 and the
   DuckDB oracle; divisions are additionally guarded with ``nullif``.
 - Arrow enabled for the Pandas-UDF extension surface.
+- The table readers' contract: UTC session time zone and Parquet
+  TIMESTAMP(NANOS) read as bigint. It is set here once; nothing on the
+  read path changes the session's conf.
 
 On a real cluster only ``master`` changes; everything else is the same
 declarative plan (reference config seam: config/pipeline.yaml:1-3).
@@ -55,7 +58,13 @@ def create_spark_session(
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.ansi.enabled": "false",
+        # Time-window starts and date_trunc must align with the tz-naive
+        # DuckDB oracle.
         "spark.sql.session.timeZone": "UTC",
+        # Parquet TIMESTAMP(NANOS) columns (pyarrow's default for
+        # ``events.ts``) read as epoch-nanos bigint instead of failing;
+        # ``sources.tables.load_table`` converts them to timestamps.
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.sql.shuffle.partitions": str(
             shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
         ),

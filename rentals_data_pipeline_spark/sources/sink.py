@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 def write_partitioned_parquet(
@@ -27,8 +28,9 @@ def write_partitioned_parquet(
     max_records_per_file: int | None = None,
     dynamic_overwrite: bool = False,
     sort_within_by: list[str] | None = None,
-) -> None:
-    """Write hive-partitioned snappy parquet, scale-safe.
+) -> StructType:
+    """Write hive-partitioned snappy parquet, scale-safe; return the
+    schema the written table reads back with.
 
     ``derived`` adds computed partition columns first (the reference
     derives ``year`` from ``month`` — jobs/io_utils.py:101).
@@ -60,9 +62,23 @@ def write_partitioned_parquet(
     filtering on a sorted column prunes whole row groups from the
     scan. Pay the sort once at write time, save it on every downstream
     range-filtered read.
+
+    The returned ``StructType`` lists the data columns, then the
+    partition columns in ``partition_by`` order (derived ones included),
+    all nullable: the layout a Parquet reader produces. Passing it to
+    ``spark.read.schema`` reads the table back without a
+    schema-inference job.
     """
     for name, expr in (derived or {}).items():
         df = df.withColumn(name, expr)
+    schema = df.schema
+    data = [f for f in schema.fields if f.name not in partition_by]
+    written = StructType(
+        [
+            StructField(f.name, f.dataType, True, f.metadata)
+            for f in data + [schema[c] for c in partition_by]
+        ]
+    )
     if partition_by:
         # One shuffle keyed on the partition columns → each dir written
         # by tasks that own all its rows; AQE coalesces small partitions.
@@ -99,6 +115,7 @@ def write_partitioned_parquet(
         if max_records_per_file is not None:
             writer = writer.option("maxRecordsPerFile", max_records_per_file)
         writer.parquet(path)
+    return written
 
 
 def merge_upsert_partitioned(

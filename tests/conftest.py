@@ -25,12 +25,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
-    s = create_spark_session(
-        "engine-tests",
-        master="local[4]",
-        shuffle_partitions=4,
-        extra_conf={"spark.sql.legacy.parquet.nanosAsLong": "true"},
-    )
+    s = create_spark_session("engine-tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
 

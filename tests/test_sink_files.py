@@ -283,3 +283,22 @@ def test_compaction_rewrites_only_fragmented_partitions(spark, tmp_path):
 
     # second pass: dataset now healthy, compaction is a no-op
     assert compact_partitioned_parquet(spark, path, ["p"]) == []
+
+
+def test_returned_schema_is_the_readback_schema(spark, tmp_path):
+    """The sink returns the schema inference would find on readback
+    (data columns, then partition columns, derived ones included), so a
+    reader can skip the inference job."""
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    out = str(tmp_path / "schema")
+    written = write_partitioned_parquet(
+        orders,
+        out,
+        ["o_orderstatus", "o_year"],
+        derived={"o_year": F.year("o_orderdate")},
+    )
+    assert written == spark.read.parquet(out).schema
+    assert written.names[-2:] == ["o_orderstatus", "o_year"]
+    back = spark.read.schema(written).parquet(out)
+    assert back.count() == orders.count()
+    assert back.exceptAll(spark.read.parquet(out)).count() == 0

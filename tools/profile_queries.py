@@ -50,7 +50,6 @@ def main() -> None:
     spark = create_spark_session(
         "profile", master=f"local[{cpus}]", shuffle_partitions=int(cpus)
     )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # warm the JVM/parquet footers like bench.py
     catalog.QUERIES["agg_pricing_summary"](spark, args.sf).count()
 

@@ -39,7 +39,6 @@ def main() -> int:
         shuffle_partitions=32,
         extra_conf={"spark.sql.ansi.enabled": "true"},
     )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     names = [n for n in catalog.QUERIES if not only or n in only]
     failed: list[str] = []
     for name in names:
