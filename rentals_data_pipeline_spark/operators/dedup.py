@@ -660,16 +660,73 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
+    driver_bound: int = 200_000,
 ) -> DataFrame:
-    """Connected components over an undirected pair list by min-label
-    propagation WITH pointer jumping: each round every node takes the
+    """Connected components over an undirected pair list: (id,
+    cluster_id) for every node in ``pairs``, labeled by its component's
+    minimum id — the canonical representative for duplicate-cluster
+    collapse (singletons carry no dedup decision and are omitted).
+
+    Scale-tiered on the DETECTED-pair count, not the corpus. The
+    projected pairs are localCheckpoint-ed first and the tier probe
+    reads the checkpoint, so the upstream (LSH band join, similarity
+    self-join) is evaluated once whichever tier runs. Below
+    ``driver_bound`` pairs a path-compressed union-find labels the
+    probe rows in one pass: the distributed loop's per-round fixed
+    overhead (join + agg + checkpoint + probe job) dwarfs the work on
+    small graphs, and near-dup pair sets are tiny relative to their
+    corpora (the sf0.1 embedding graph is ~450 edges out of 2000
+    vectors). At or above it, ``_connected_components_distributed``
+    runs over the same checkpoint. Output is bit-identical either way
+    (min-label is strategy-independent), so one oracle certifies both
+    tiers.
+    """
+    pairs = pairs.select(id_a, id_b).localCheckpoint(eager=True)
+    # coalesce(1): one task reads the checkpoint up to the bound, so
+    # the probe is one job at any partition count (a bare limit
+    # collect scales up over the partitions, one job per round)
+    probe = pairs.coalesce(1).limit(driver_bound).collect()
+    if len(probe) >= driver_bound:
+        return _connected_components_distributed(pairs, id_a, id_b, max_iter)
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for r in probe:
+        a, b = r[0], r[1]
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+    label: dict = {}
+    for node in parent:
+        root = find(node)
+        cur = label.get(root)
+        if cur is None or node < cur:
+            label[root] = node
+    rows = sorted((node, label[find(node)]) for node in parent)
+    return pairs.sparkSession.createDataFrame(
+        rows, "id bigint, cluster_id bigint"
+    )
+
+
+def _connected_components_distributed(
+    pairs: DataFrame, id_a: str, id_b: str, max_iter: int
+) -> DataFrame:
+    """The at-or-above-bound tier of ``connected_components``: min-label
+    propagation WITH pointer jumping. Each round every node takes the
     min of (its label, its neighbors' labels, its label's label). The
     extra label-of-label hop (through the previous round's label map)
     compresses label chains each round — measured 17 rounds -> 11 on
     the sf0.1 embedding near-dup graph; per-round cost is dominated by
-    fixed job overhead on these tiny label frames. At fixpoint
-    the label is the component's minimum id, the canonical cluster
-    representative for duplicate-cluster collapse.
+    fixed job overhead on these tiny label frames.
 
     Distributed-iteration mechanics that matter at scale:
 
@@ -685,16 +742,12 @@ def connected_components(
     - Each round's result is ``localCheckpoint``-ed: without lineage
       truncation an iterative DataFrame plan doubles per round and
       planning time explodes long before data size matters.
-
-    Returns (id, cluster_id) for every node that appears in ``pairs``
-    (singletons carry no dedup decision and are omitted by design).
     """
-    sym = pairs.select(
+    edges = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     ).unionByName(
         pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     )
-    edges = sym.localCheckpoint(eager=True)
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -1297,64 +1350,6 @@ def span_dedup_rewrite(
     return _apply
 
 
-def connected_components_auto(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
-    driver_bound: int = 200_000,
-) -> DataFrame:
-    """Scale-tiered connected components: identical contract to
-    ``connected_components`` (min-id label per node appearing in
-    ``pairs``), with the execution strategy chosen by the PAIR count —
-    the same runtime demotion AQE applies to joins, applied to the
-    iterative fixpoint.
-
-    Below ``driver_bound`` pairs the edge list collects to the driver
-    and a path-compressed union-find labels it in one pass — the
-    pointer-jumping loop's per-round fixed overhead (a join + agg +
-    localCheckpoint + probe job per round) dwarfs the actual work on
-    small graphs, and near-dup pair sets are tiny relative to their
-    corpora by construction (measured: the sf0.1 embedding graph is
-    ~450 edges out of 2000 vectors). At or above the bound it falls
-    back to the distributed pointer-jumping loop unchanged. The bound
-    is on the DETECTED-pair count, not the corpus: a 100 TB corpus
-    whose near-dup graph exceeds it takes the distributed path
-    automatically. Output is bit-identical either way (min-label is
-    strategy-independent), so the same oracle certifies both tiers.
-    """
-    probe = pairs.select(id_a, id_b).limit(driver_bound).collect()
-    if len(probe) >= driver_bound:
-        return connected_components(pairs, id_a, id_b, max_iter)
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for r in probe:
-        a, b = r[0], r[1]
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    label: dict = {}
-    for node in parent:
-        root = find(node)
-        cur = label.get(root)
-        if cur is None or node < cur:
-            label[root] = node
-    rows = sorted((node, label[find(node)]) for node in parent)
-    return pairs.sparkSession.createDataFrame(
-        rows or [], "id bigint, cluster_id bigint"
-    )
-
-
 # Directory-bucket count for a persisted cluster map (same discipline
 # as N_BAND_BUCKETS: the constant is baked into directory names, so
 # build and probe must agree; recorded by a map_meta marker dir).
@@ -1373,7 +1368,7 @@ def cluster_map(
     """The near-dup CLUSTER MAP: (doc_id, cluster_id, sz) for every
     document that belongs to a near-dup cluster (word-``ngram`` Jaccard
     > ``threshold``, the certified ``minhash_near_dup_pairs`` →
-    ``connected_components_auto`` chain), where ``cluster_id`` is the
+    ``connected_components`` chain), where ``cluster_id`` is the
     component's min doc_id and ``sz`` its member count. Docs outside
     any cluster are absent — consumers left-join and treat absence as
     a singleton (sz 1), exactly like the soft-dedup weight fold.
@@ -1397,7 +1392,7 @@ def cluster_map(
             threshold=threshold,
         )
     )
-    cc = connected_components_auto(pairs)
+    cc = connected_components(pairs)
     sizes = cc.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("sz"))
     return cc.join(sizes, "cluster_id").select(
         F.col("id").cast("long").alias(id_col),

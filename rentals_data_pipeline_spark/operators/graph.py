@@ -16,7 +16,10 @@ div 100 — so a 1000-executor run, a local[1] run, and an ANSI-SQL
 replay produce BIT-IDENTICAL ranks. The flooring leaks ~deg ulps of
 mass per node per iteration (bounded by n_nodes * iterations / scale,
 ~1e-6 of total mass at the default 1e12 scale), a worthwhile trade for
-an exactly-certifiable fixpoint.
+an exactly-certifiable fixpoint. The same exactness makes the scale
+tier a private detail of the one entry point: ``pagerank`` runs small
+edge lists on the driver and large ones as the distributed loop, with
+bit-identical output.
 """
 
 from __future__ import annotations
@@ -25,6 +28,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 PR_SCALE = 10**12
+# Distributed-tier lineage truncation cadence (iterations). Above the
+# catalog's 5 iterations, so its plan carries no per-iteration
+# checkpoint; a long run still keeps its plan bounded.
+_CHECKPOINT_EVERY = 10
 
 
 def basket_pairs(
@@ -80,32 +87,77 @@ def pagerank(
     iterations: int = 5,
     damping_pct: int = 85,
     scale: int = PR_SCALE,
-    checkpoint_every: int = 0,
+    driver_bound: int = 200_000,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list (feed both
     directions for an undirected graph). Returns (node, deg,
     rank_scaled) with ranks as integers at ``scale`` (initial mass
-    scale/n per node).
+    scale/n per node). Every node must appear as a source (true for
+    symmetrized graphs); nodes with no in-edges still receive the
+    teleport base term.
 
-    Every node must appear as a source (true for symmetrized graphs);
-    nodes with no in-edges still receive the teleport base term via
-    the left join. Each iteration is one join of the rank table onto
-    the edge list (both shuffle-keyed on the node — at scale,
-    pre-partition ``edges`` by ``src`` once and every iteration reuses
-    that layout) plus one map-side-combined sum keyed on ``dst``.
-    ``checkpoint_every=k`` truncates plan lineage with localCheckpoint
-    every k iterations, same discipline as connected_components — use
-    it when iterations > ~8.
-
-    The edge list is localCheckpoint-ed up front: every iteration
-    joins against it, and without materialization the edge-building
-    subtree (which may itself contain shuffles — e.g. the co-purchase
-    pair generation) replays once PER ITERATION inside the final job
-    (measured 3.9s -> ~1.5s at 5 iterations on the sf0.1 co-purchase
-    graph)."""
+    Scale-tiered on the EDGE count. The projected edge list is
+    localCheckpoint-ed first and the tier probe reads the checkpoint,
+    so the edge-building subtree (which may itself contain shuffles —
+    e.g. the co-purchase pair generation) is evaluated once whichever
+    tier runs. Below ``driver_bound`` edges the probe rows run the
+    recurrence as plain Python-int arithmetic — one job instead of a
+    join + aggregate per iteration; at or above it the distributed
+    loop (``_pagerank_distributed``) runs over the same checkpoint.
+    Output is BIT-IDENTICAL either way (every step is truncating
+    integer division and commutative integer sums), so the same
+    unrolled-CTE oracle certifies both tiers; the equality is also
+    pinned by a unit test on random graphs."""
     if not 0 < damping_pct < 100:
         raise ValueError("damping_pct must be in (0, 100)")
-    edges = edges.localCheckpoint(eager=True)
+    edges = edges.select(src, dst).localCheckpoint(eager=True)
+    # coalesce(1): one task reads the checkpoint up to the bound, so
+    # the probe is one job at any partition count (a bare limit
+    # collect scales up over the partitions, one job per round)
+    probe = edges.coalesce(1).limit(driver_bound).collect()
+    if len(probe) >= driver_bound:
+        return _pagerank_distributed(
+            edges, src, dst, iterations, damping_pct, scale
+        )
+    deg: dict = {}
+    for r in probe:
+        deg[r[0]] = deg.get(r[0], 0) + 1
+    n = len(deg)
+    if n == 0:
+        return edges.sparkSession.createDataFrame(
+            [], "node bigint, deg bigint, rank_scaled bigint"
+        )
+    base = ((100 - damping_pct) * scale) // (100 * n)
+    rank = {v: scale // n for v in deg}
+    for _ in range(iterations):
+        mass: dict = {}
+        for r in probe:
+            s, d = r[0], r[1]
+            mass[d] = mass.get(d, 0) + rank[s] // deg[s]
+        rank = {
+            v: base + (damping_pct * mass.get(v, 0)) // 100 for v in deg
+        }
+    rows = sorted((v, deg[v], rank[v]) for v in deg)
+    return edges.sparkSession.createDataFrame(
+        rows, "node bigint, deg bigint, rank_scaled bigint"
+    )
+
+
+def _pagerank_distributed(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    iterations: int,
+    damping_pct: int,
+    scale: int,
+) -> DataFrame:
+    """The at-or-above-bound tier of ``pagerank`` over its checkpointed
+    edge list. Each iteration is one join of the rank table onto the
+    edge list (both shuffle-keyed on the node — at scale, pre-partition
+    the edges by ``src`` once and every iteration reuses that layout)
+    plus one map-side-combined sum keyed on ``dst``; the left join
+    gives nodes with no in-edges their base term. Lineage is truncated
+    every ``_CHECKPOINT_EVERY`` iterations."""
     deg = edges.groupBy(F.col(src).alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -139,7 +191,7 @@ def pagerank(
                 f"base + ({damping_pct} * coalesce(mass, 0)) div 100"
             ).alias("rank"),
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
+        if (i + 1) % _CHECKPOINT_EVERY == 0:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks.select("node", "deg", F.col("rank").alias("rank_scaled"))
 
@@ -158,62 +210,3 @@ def triangle_candidates(
     p2 = pairs.select(F.col(a).alias("y"), F.col(b).alias("z"))
     p3 = pairs.select(F.col(a).alias("x"), F.col(b).alias("z"))
     return p1.join(p2, "y").join(p3, ["x", "z"])
-
-
-def pagerank_auto(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    *,
-    iterations: int = 5,
-    damping_pct: int = 85,
-    scale: int = PR_SCALE,
-    checkpoint_every: int = 0,
-    driver_bound: int = 200_000,
-) -> DataFrame:
-    """Scale-tiered PageRank, same contract as ``pagerank``: the exact
-    integer recurrence is engine-independent, so a sub-bound edge list
-    collects to the driver and runs as plain Python-int arithmetic —
-    one job instead of a join + aggregate (+ checkpoint) per iteration
-    — while at-or-above-bound graphs take the distributed loop
-    unchanged. Output is BIT-IDENTICAL either way (every step is
-    truncating integer division and commutative integer sums), so the
-    same unrolled-CTE oracle certifies both tiers; the equality is
-    also pinned by a unit test on random graphs. The bound is on the
-    EDGE count — a 100 TB co-purchase graph exceeds it and runs
-    distributed automatically."""
-    if not 0 < damping_pct < 100:
-        raise ValueError("damping_pct must be in (0, 100)")
-    probe = edges.select(src, dst).limit(driver_bound).collect()
-    if len(probe) >= driver_bound:
-        return pagerank(
-            edges,
-            src,
-            dst,
-            iterations=iterations,
-            damping_pct=damping_pct,
-            scale=scale,
-            checkpoint_every=checkpoint_every,
-        )
-    deg: dict = {}
-    for r in probe:
-        deg[r[0]] = deg.get(r[0], 0) + 1
-    n = len(deg)
-    if n == 0:
-        return edges.sparkSession.createDataFrame(
-            [], "node bigint, deg bigint, rank_scaled bigint"
-        )
-    base = ((100 - damping_pct) * scale) // (100 * n)
-    rank = {v: scale // n for v in deg}
-    for _ in range(iterations):
-        mass: dict = {}
-        for r in probe:
-            s, d = r[0], r[1]
-            mass[d] = mass.get(d, 0) + rank[s] // deg[s]
-        rank = {
-            v: base + (damping_pct * mass.get(v, 0)) // 100 for v in deg
-        }
-    rows = sorted((v, deg[v], rank[v]) for v in deg)
-    return edges.sparkSession.createDataFrame(
-        rows, "node bigint, deg bigint, rank_scaled bigint"
-    )

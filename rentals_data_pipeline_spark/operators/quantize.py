@@ -228,7 +228,7 @@ def train_pq_codebooks(
     caller sizes ``sample_mod`` so the sample is a training-set
     constant (~1e4-1e5 rows) independent of corpus scale, and the
     collect itself is a ``limit(bound + 1)`` probe (the
-    ``pagerank_auto`` pattern) that raises when the sample exceeds
+    ``pagerank`` tier-probe pattern) that raises when the sample exceeds
     ``max_sample_rows`` — a miscalled ``sample_mod=1`` on a huge
     corpus fails fast instead of collecting the world. Vectors are
     unit-normalized first so ADC inner product ranks like cosine.

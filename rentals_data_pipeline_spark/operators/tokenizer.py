@@ -19,10 +19,10 @@ model:
   BPE's left-to-right non-overlap), and the whole step stays in
   whole-stage codegen — no Python in the loop.
 - **One 1-row collect per iteration** (the argmax pair), the same
-  bounded-driver contract as ``graph.pagerank_auto``. Ties break
+  bounded-driver contract as ``graph.pagerank``'s tier probe. Ties break
   deterministically by (count DESC, pair ASC) so the learned merge
   table is independent of partitioning.
-- **Lineage is checkpointed** every ``checkpoint_every`` merges —
+- **Lineage is checkpointed** every ``_CHECKPOINT_EVERY`` merges —
   each iteration adds a regexp_replace to the plan; an un-checkpointed
   30k-merge loop would build a 30k-operator lineage.
 - **The histogram is bounded by contract.** ``max_words`` caps the
@@ -59,6 +59,9 @@ from rentals_data_pipeline_spark.operators.topn import global_top_n
 #: End-of-word marker symbol (its own symbol, so merges may absorb it:
 #: ("t", "</w>") is learnable and yields the suffix symbol "t</w>").
 EOW = "</w>"
+
+#: Distributed-tier lineage truncation cadence (merges).
+_CHECKPOINT_EVERY = 10
 
 
 def _quote_regex(sym: str) -> str:
@@ -204,7 +207,6 @@ def bpe_train(
     text_col: str = "text",
     num_merges: int = 50,
     max_words: int = 1_000_000,
-    checkpoint_every: int = 10,
     min_pair_count: int = 2,
     driver_bound: int = 200_000,
 ) -> list[tuple[str, str]]:
@@ -216,7 +218,7 @@ def bpe_train(
     frequency break by lexicographic pair order, and the ``max_words``
     truncation orders by (cnt DESC, word ASC).
 
-    Scale-tiered like ``graph.pagerank_auto``: a histogram below
+    Scale-tiered like ``graph.pagerank``: a histogram below
     ``driver_bound`` rows collects ONCE and folds every merge
     driver-side in pure Python (incremental pair counts + lazy-deletion
     heap — a 32k-merge production vocabulary trains in seconds), while
@@ -285,7 +287,7 @@ def bpe_train(
             "syms",
             F.regexp_replace("syms", _merge_pattern(a, b), _quote_replacement(a + b)),
         )
-        if (step + 1) % checkpoint_every == 0:
+        if (step + 1) % _CHECKPOINT_EVERY == 0:
             hist = hist.localCheckpoint()
     return merges
 

@@ -20,7 +20,7 @@ the entire input.
    row's rank within its partition because ids are assigned in
    partition iteration order.
 3. A per-partition count aggregate (numPartitions rows — the same
-   bounded-collect contract as ``graph.pagerank_auto``'s probes)
+   bounded-collect contract as ``graph.pagerank``'s tier probe)
    prefix-sums to exclusive offsets on the driver; a tiny broadcast
    join maps them back.
 4. ``filter(offset + sequence < n)`` — partitions wholly inside the

@@ -286,14 +286,14 @@ def dedup_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     same components by recursive min-label reachability over the
     exhaustively recomputed pair graph (thresholding the identically
     rounded jaccard), so the hash match certifies pair recall AND the
-    clustering fixpoint. CC is the scale-tiered ``_auto`` variant
+    clustering fixpoint. CC is scale-tiered inside the operator
     (r13): bit-identical output, union-find below the 200k-pair bound
     where the distributed loop's per-round fixed cost (join + agg +
     checkpoint + probe job) dwarfs the work, distributed pointer
     jumping above it."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = docs.transform(DD.minhash_near_dup_pairs(threshold=0.5))
-    return DD.connected_components_auto(pairs).select(
+    return DD.connected_components(pairs).select(
         F.col("id").alias("doc_id"), "cluster_id"
     )
 
@@ -318,13 +318,12 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs template removal, not representative-keeping). Two tiny
     aggregations over the connected-components output; the oracle
     extends the duplicate-clusters recursive CTE, so the hash match
-    certifies the full pair→CC→distribution chain. CC is the
-    scale-tiered ``_auto`` (r13, bit-identical — see
-    dedup_duplicate_clusters)."""
+    certifies the full pair→CC→distribution chain. CC is
+    scale-tiered (r13, bit-identical — see dedup_duplicate_clusters)."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = docs.transform(DD.minhash_near_dup_pairs(threshold=0.5))
     sizes = (
-        DD.connected_components_auto(pairs)
+        DD.connected_components(pairs)
         .groupBy("cluster_id")
         .agg(F.count(F.lit(1)).alias("cluster_size"))
     )
@@ -380,11 +379,11 @@ def dedup_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     demotes it to a broadcast at runtime (the corpus never shuffles),
     while a template-heavy corpus whose clustered slice is
     corpus-proportional degrades to a shuffle join instead of a driver
-    OOM (r12 review).  CC uses the scale-tiered ``_auto`` variant —
-    bit-identical output, union-find below the pair bound."""
+    OOM (r12 review).  CC is scale-tiered — bit-identical output,
+    union-find below the pair bound."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = docs.transform(DD.minhash_near_dup_pairs(threshold=0.5))
-    cc = DD.connected_components_auto(pairs)
+    cc = DD.connected_components(pairs)
     sizes = cc.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("sz"))
     member_sz = cc.join(sizes, "cluster_id").select(
         F.col("id").alias("doc_id"), "sz"

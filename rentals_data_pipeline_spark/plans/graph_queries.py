@@ -22,8 +22,7 @@ from pyspark.sql import functions as F
 from rentals_data_pipeline_spark.operators.graph import (
     PR_SCALE,
     basket_pairs,
-    pagerank,  # noqa: F401 — distributed tier, used via pagerank_auto
-    pagerank_auto,
+    pagerank,
     triangle_candidates,
 )
 from rentals_data_pipeline_spark.plans.catalog import query
@@ -125,12 +124,12 @@ def graph_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/graph.py::pagerank). The oracle UNROLLS the loop into
     five chained CTEs computing the identical integer recurrence —
     contribution = rank div deg, damped sum = (85 * mass) div 100 — so
-    every node's rank after five distributed join+aggregate rounds is
-    certified to the exact integer. Per iteration the engine shuffles
-    only (node, contrib) messages keyed on the destination; at 100 TB
-    pre-partitioning the edge list by src makes the per-iteration join
-    co-located, and checkpoint_every truncates lineage (the
-    connected-components discipline)."""
+    every node's rank after five rounds is certified to the exact
+    integer on either of pagerank's tiers. On the distributed tier
+    each iteration shuffles only (node, contrib) messages keyed on the
+    destination; at 100 TB pre-partitioning the edge list by src makes
+    the per-iteration join co-located, and the loop truncates lineage
+    on a fixed cadence that five iterations never reach."""
     edges = _pair_graph(spark, sf_dir)
     sym = edges.select(
         F.col("part_a").alias("src"), F.col("part_b").alias("dst")
@@ -140,7 +139,7 @@ def graph_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tiered: sub-bound edge lists (this corpus) run the identical
     # integer recurrence driver-side in one job; larger graphs take
     # the distributed loop — same bits either way
-    return pagerank_auto(sym, iterations=5, damping_pct=85, scale=PR_SCALE)
+    return pagerank(sym, iterations=5, damping_pct=85, scale=PR_SCALE)
 
 
 _TRIANGLE_SQL = (

@@ -95,6 +95,51 @@ def run_pipeline(df: DataFrame, config: dict = DEFAULT_CONFIG) -> DataFrame:
     return df
 
 
+def run_pipeline_observed(
+    df: DataFrame, config: dict = DEFAULT_CONFIG
+) -> tuple[DataFrame, dict]:
+    """``run_pipeline`` with per-stage observable metrics: every stage
+    boundary gets a ``CollectMetrics`` node (``df.observe``) carrying
+    row count and value-null count, so ONE action on the returned
+    DataFrame yields a full per-stage funnel — rows in, rows surviving
+    each filter/dedup, null incidence — with ZERO extra jobs or scans.
+    This is the production observability pattern for a 100 TB run:
+    the alternative (a .count() per stage) re-executes the upstream
+    plan once per stage.
+
+    Returns (df, observations): after any action on ``df``, each
+    ``observations[stage_name].get`` is a dict of that stage's
+    metrics. Stage names follow build_stages order.
+    """
+    from pyspark.sql import Observation
+
+    value_col = config["value_col"]
+    obs: dict[str, Observation] = {}
+    stages = build_stages(df.columns, config)
+    names = [
+        "project_cast",
+        "unpivot",
+        "parse_period",
+        "drop_null_values",
+        "dedup_keep_first",
+        "pct_change",
+        "rank_in_group",
+    ]
+    for name, stage in zip(names, stages):
+        df = df.transform(stage)
+        o = Observation(f"stage_{name}")
+        metrics = [F.count(F.lit(1)).alias("rows")]
+        if value_col in df.columns:
+            metrics.append(
+                F.sum(
+                    F.when(F.col(value_col).isNull(), 1).otherwise(0)
+                ).alias("value_nulls")
+            )
+        df = df.observe(o, *metrics)
+        obs[name] = o
+    return df, obs
+
+
 def default_quality_checks(config: dict = DEFAULT_CONFIG) -> list[Q.DataQualityCheck]:
     """The reference DAG's four checks from config thresholds
     (dags/rental_pipeline_dag.py:137-142, config/pipeline.yaml:18-22)."""
@@ -300,48 +345,3 @@ def main(argv: list[str] | None = None) -> int:
 
 if __name__ == "__main__":
     raise SystemExit(main())
-
-
-def run_pipeline_observed(
-    df: DataFrame, config: dict = DEFAULT_CONFIG
-) -> tuple[DataFrame, dict]:
-    """``run_pipeline`` with per-stage observable metrics: every stage
-    boundary gets a ``CollectMetrics`` node (``df.observe``) carrying
-    row count and value-null count, so ONE action on the returned
-    DataFrame yields a full per-stage funnel — rows in, rows surviving
-    each filter/dedup, null incidence — with ZERO extra jobs or scans.
-    This is the production observability pattern for a 100 TB run:
-    the alternative (a .count() per stage) re-executes the upstream
-    plan once per stage.
-
-    Returns (df, observations): after any action on ``df``, each
-    ``observations[stage_name].get`` is a dict of that stage's
-    metrics. Stage names follow build_stages order.
-    """
-    from pyspark.sql import Observation
-
-    value_col = config["value_col"]
-    obs: dict[str, Observation] = {}
-    stages = build_stages(df.columns, config)
-    names = [
-        "project_cast",
-        "unpivot",
-        "parse_period",
-        "drop_null_values",
-        "dedup_keep_first",
-        "pct_change",
-        "rank_in_group",
-    ]
-    for name, stage in zip(names, stages):
-        df = df.transform(stage)
-        o = Observation(f"stage_{name}")
-        metrics = [F.count(F.lit(1)).alias("rows")]
-        if value_col in df.columns:
-            metrics.append(
-                F.sum(
-                    F.when(F.col(value_col).isNull(), 1).otherwise(0)
-                ).alias("value_nulls")
-            )
-        df = df.observe(o, *metrics)
-        obs[name] = o
-    return df, obs

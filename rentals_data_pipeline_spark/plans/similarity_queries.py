@@ -299,7 +299,7 @@ def embedding_curation(
     """
     from rentals_data_pipeline_spark.operators import sampling as SP
     from rentals_data_pipeline_spark.operators.dedup import (
-        connected_components_auto,
+        connected_components,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -320,7 +320,7 @@ def embedding_curation(
     # tiered CC: driver union-find on sub-bound pair graphs (this
     # corpus's ~450 edges), distributed pointer jumping beyond —
     # identical min-label output, same oracle certifies both tiers
-    clusters = connected_components_auto(pairs)
+    clusters = connected_components(pairs)
     keep = (
         emb.select("vec_id")
         # clusters ≈ near-dup members only — orders of magnitude smaller

@@ -291,9 +291,6 @@ def compact_partitioned_parquet(
     )
     if not frag:
         return frag
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    prev_mode = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "dynamic")
     pred = None
     for item in frag:
         clause = F.lit(True)
@@ -328,16 +325,11 @@ def compact_partitioned_parquet(
             *[F.col(c) for c in partition_by],
             *[F.col(c) for c in sort_within_by],
         )
-    try:
-        (
-            writer.drop("_compact_salt")
-            .write.mode("overwrite")
-            .partitionBy(*partition_by)
-            .parquet(path)
-        )
-    finally:
-        if prev_mode is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_mode)
+    (
+        writer.drop("_compact_salt")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )
     return frag

@@ -8,6 +8,7 @@ golden fixtures with planted nulls and duplicates.
 from __future__ import annotations
 
 import datetime as dt
+import itertools
 import sys
 from pathlib import Path
 
@@ -28,6 +29,27 @@ def spark() -> SparkSession:
     s = create_spark_session("engine-tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def jobs_run(spark):
+    """``jobs_run(fn)``: the number of Spark jobs ``fn()`` runs,
+    counted under a job group with the status tracker."""
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def run(fn) -> int:
+        group = f"jobs-run-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(key, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 LONG_SCHEMA = T.StructType(

@@ -44,7 +44,10 @@ def test_cluster_map_matches_inline_chain(spark):
         for r in DD.cluster_map(_docs(spark)).collect()
     )
     pairs = _docs(spark).transform(DD.minhash_near_dup_pairs(threshold=0.5))
-    cc = {r.id: r.cluster_id for r in DD.connected_components(pairs).collect()}
+    cc = {
+        r.id: r.cluster_id
+        for r in DD.connected_components(pairs, driver_bound=1).collect()
+    }
     sizes: dict = {}
     for cid in cc.values():
         sizes[cid] = sizes.get(cid, 0) + 1

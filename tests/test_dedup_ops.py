@@ -77,7 +77,8 @@ def test_connected_components_chain_and_islands(spark):
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], ["id_a", "id_b"]
     )
     got = {
-        r["id"]: r["cluster_id"] for r in connected_components(pairs).collect()
+        r["id"]: r["cluster_id"]
+        for r in connected_components(pairs, driver_bound=1).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
 
@@ -89,7 +90,9 @@ def test_connected_components_converges_early(spark):
     pairs = spark.createDataFrame([(7, 3), (3, 9)], ["id_a", "id_b"])
     got = {
         r["id"]: r["cluster_id"]
-        for r in connected_components(pairs, max_iter=30).collect()
+        for r in connected_components(
+            pairs, max_iter=30, driver_bound=1
+        ).collect()
     }
     assert got == {3: 3, 7: 3, 9: 3}
 
@@ -321,38 +324,40 @@ def test_shared_span_pairs_doc_freq_cap(spark):
     assert pairs == {(10, 11)}
 
 
-def test_cc_auto_matches_distributed_on_random_graphs(spark):
-    """Tiered CC (driver union-find) must be bit-identical to the
-    distributed pointer-jumping loop on arbitrary graphs, including
-    chains, cycles, and singleton-free multi-component mixes."""
+def test_cc_tiers_agree_on_random_graphs(spark):
+    """The driver tier (union-find) must be bit-identical to the
+    distributed pointer-jumping loop (forced by driver_bound=1) on
+    arbitrary graphs, including chains, cycles, and singleton-free
+    multi-component mixes."""
     import random
 
     from rentals_data_pipeline_spark.operators.dedup import (
         connected_components,
-        connected_components_auto,
     )
 
     rng = random.Random(17)
     edges = [(rng.randrange(0, 60), rng.randrange(0, 60)) for _ in range(80)]
     edges += [(i, i + 1) for i in range(90, 99)]  # a 10-node chain
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    dist = sorted(map(tuple, connected_components(pairs).collect()))
-    auto = sorted(map(tuple, connected_components_auto(pairs).collect()))
-    assert dist == auto
+    driver_tier = sorted(map(tuple, connected_components(pairs).collect()))
+    dist_tier = sorted(
+        map(tuple, connected_components(pairs, driver_bound=1).collect())
+    )
+    assert driver_tier == dist_tier
 
 
 def test_cc_auto_falls_back_above_bound(spark):
     """At or above the driver bound the distributed path runs (same
     output), so huge pair graphs never collect."""
     from rentals_data_pipeline_spark.operators.dedup import (
-        connected_components_auto,
+        connected_components,
     )
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "id_a long, id_b long"
     )
     out = sorted(
-        map(tuple, connected_components_auto(pairs, driver_bound=5).collect())
+        map(tuple, connected_components(pairs, driver_bound=5).collect())
     )
     # one chain component labeled by its min id
     assert out == [(i, 0) for i in range(31)]

@@ -1,7 +1,8 @@
 """Unit tests for operators/graph.py: the scaled-integer PageRank
 recurrence against a hand-computed reference, its partitioning
 invariance (the whole point of integer arithmetic), and wedge-closure
-triangle enumeration."""
+triangle enumeration. ``driver_bound=1`` forces PageRank's distributed
+tier on any non-empty graph."""
 
 from __future__ import annotations
 
@@ -41,7 +42,8 @@ def test_pagerank_matches_integer_reference(spark):
     edges = _sym([(1, 2), (2, 3), (2, 4)])
     df = spark.createDataFrame(edges, ["src", "dst"])
     got = {
-        r["node"]: r["rank_scaled"] for r in pagerank(df).collect()
+        r["node"]: r["rank_scaled"]
+        for r in pagerank(df, driver_bound=1).collect()
     }
     assert got == _reference_pagerank(edges)
     # mass approximately conserved (floor leak only)
@@ -54,15 +56,25 @@ def test_pagerank_partitioning_invariant(spark):
     edges = _sym([(i, (i * 7) % 23 + 100) for i in range(40)])
     df1 = spark.createDataFrame(edges, ["src", "dst"])
     df2 = df1.repartition(13, "dst")
-    r1 = {r["node"]: r["rank_scaled"] for r in pagerank(df1).collect()}
-    r2 = {r["node"]: r["rank_scaled"] for r in pagerank(df2).collect()}
+    r1 = {
+        r["node"]: r["rank_scaled"]
+        for r in pagerank(df1, driver_bound=1).collect()
+    }
+    r2 = {
+        r["node"]: r["rank_scaled"]
+        for r in pagerank(df2, driver_bound=1).collect()
+    }
     assert r1 == r2
 
 
 def test_pagerank_sink_heavy_node_ranks_highest(spark):
     # Star: hub 0 connected to 1..6 — the hub must outrank every leaf.
     edges = _sym([(0, i) for i in range(1, 7)])
-    got = {r["node"]: r["rank_scaled"] for r in pagerank(spark.createDataFrame(edges, ["src", "dst"])).collect()}
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    got = {
+        r["node"]: r["rank_scaled"]
+        for r in pagerank(df, driver_bound=1).collect()
+    }
     hub = got[0]
     assert all(hub > v for k, v in got.items() if k != 0)
 

@@ -136,28 +136,24 @@ def test_chi_square_catalog_shape(spark):
     assert 0.0 <= row["cramers_v"] <= 1.0
 
 
-def test_pagerank_auto_bit_identical_to_distributed(spark):
+def test_pagerank_tiers_bit_identical(spark):
     """The driver tier must reproduce the distributed integer
-    recurrence bit-for-bit on arbitrary graphs (and fall back above
-    the bound, same output)."""
+    recurrence (forced by driver_bound=1) bit-for-bit on arbitrary
+    graphs."""
     import random
 
-    from rentals_data_pipeline_spark.operators.graph import (
-        pagerank,
-        pagerank_auto,
-    )
+    from rentals_data_pipeline_spark.operators.graph import pagerank
 
     rng = random.Random(23)
     raw = {(rng.randrange(0, 40), rng.randrange(0, 40)) for _ in range(120)}
     edges = [(a, b) for a, b in raw if a != b]
     sym = edges + [(b, a) for a, b in edges]
     df = spark.createDataFrame(sym, "src long, dst long")
-    dist = sorted(map(tuple, pagerank(df, iterations=4).collect()))
-    auto = sorted(map(tuple, pagerank_auto(df, iterations=4).collect()))
-    fallback = sorted(
-        map(tuple, pagerank_auto(df, iterations=4, driver_bound=3).collect())
+    driver_tier = sorted(map(tuple, pagerank(df, iterations=4).collect()))
+    dist_tier = sorted(
+        map(tuple, pagerank(df, iterations=4, driver_bound=1).collect())
     )
-    assert dist == auto == fallback
+    assert driver_tier == dist_tier
 
 
 def test_u_shaped_attribution_golden(spark):

@@ -240,7 +240,9 @@ def test_merge_upsert_first_write_bootstraps(spark):
 def test_compaction_rewrites_only_fragmented_partitions(spark, tmp_path):
     """compact_partitioned_parquet: fragmented dirs collapse to their
     byte-derived target count, healthy dirs keep their files, and the
-    data survives byte-identically."""
+    data survives byte-identically. The rewrite is dynamic even under
+    a session set to static overwrite (which would delete partition
+    b), and the session's mode is left as the caller set it."""
     import os
 
     from pyspark.sql import functions as F
@@ -271,9 +273,15 @@ def test_compaction_rewrites_only_fragmented_partitions(spark, tmp_path):
 
     frag = list_fragmented_partitions(spark, path, ["p"], target_file_bytes=1 << 30)
     assert [i["partition"] for i in frag] == [{"p": "a"}]
-    report = compact_partitioned_parquet(
-        spark, path, ["p"], target_file_bytes=1 << 30
-    )
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(mode_key, "static")
+    try:
+        report = compact_partitioned_parquet(
+            spark, path, ["p"], target_file_bytes=1 << 30
+        )
+        assert spark.conf.get(mode_key) == "static"
+    finally:
+        spark.conf.unset(mode_key)
     assert report == frag
 
     assert len(files_in("a")) == 1  # 8 tiny files -> 1 target file

@@ -16,7 +16,6 @@ reads both.
 from __future__ import annotations
 
 import datetime as dt
-import itertools
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -24,29 +23,12 @@ from pyspark.sql import functions as F
 
 from rentals_data_pipeline_spark.sources.tables import load_table
 
-_groups = itertools.count()
-
-
-def _jobs_run(spark, fn) -> int:
-    """Number of Spark jobs ``fn()`` runs, counted under a job group."""
-    sc = spark.sparkContext
-    group = f"table-schemas-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(key, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_repeat_load_runs_no_job(spark, tmp_path):
+def test_repeat_load_runs_no_job(spark, tmp_path, jobs_run):
     path = str(tmp_path / "t.parquet")
     spark.range(100).selectExpr("id", "id * 2 AS v").write.parquet(path)
     sf = str(tmp_path)
-    assert _jobs_run(spark, lambda: load_table(spark, sf, "t")) <= 1
-    assert _jobs_run(spark, lambda: load_table(spark, sf, "t")) == 0
+    assert jobs_run(lambda: load_table(spark, sf, "t")) <= 1
+    assert jobs_run(lambda: load_table(spark, sf, "t")) == 0
     df = load_table(spark, sf, "t")
     assert df.schema == spark.read.parquet(path).schema
     assert df.count() == 100
