@@ -45,48 +45,26 @@ def entry(spark: SparkSession) -> DataFrame:
 # passed via --changed) + (oldest driver certification first, ties by
 # name); group 2 is the rest of the oracle-paired catalog; group 3 is
 # rows-only by design (no_oracle rows>0; golden tests pin semantics).
-# Round-14 rotation (r13 verdict item 1): the r13 OPTIMIZATION round
-# touched 15 queries whose rewrites were certified only by the
-# builder's full-catalog pandas-oracle sweep — the rotation was not
-# regenerated after those commits, so they missed the driver's
-# first-50 gate. Group 0 now leads with exactly that set (the
-# rows-only profile_orders_columns_approx stays in group 3 by rule).
+# Current rotation: group 0 leads with the 12 oracle-paired queries
+# that reach ``graph.pagerank`` or ``dedup.connected_components``,
+# whose tiering moved inside one entry point that checkpoints its
+# input before the tier probe (the rows-only text_bpe_merges, which
+# reaches the changed ``bpe_train``, stays in group 3 by rule).
 _CHECK_PRIORITY: tuple[str, ...] = (
-    # generated by: python tools/cert_rotation.py --changed analytics_copurchase_pairs graph_pagerank_copurchase graph_triangle_participation graph_jaccard_link_prediction graph_degree_distribution dedup_duplicate_clusters dedup_cluster_size_histogram profile_orders_columns profile_orders_columns_approx quality_referential_integrity analytics_funnel_stages scd2_apply_changes_incremental cdc_incremental_agg_orders multimodal_container_probe text_tfidf_top_terms  # history through r13
+    # generated by: python tools/cert_rotation.py --changed graph_pagerank_copurchase dedup_duplicate_clusters dedup_cluster_size_histogram dedup_soft_dedup_weights dedup_cluster_map_build dedup_duplicate_clusters_probe dedup_cluster_size_histogram_probe dedup_soft_dedup_weights_probe dedup_cluster_map_point_probe dedup_token_budget_by_source pipeline_embedding_curation pipeline_embedding_curation_srp  # history through r14
     # -- group 0: this round's 50 driver checks (changed-this-round
     # first, then oldest driver certification first) ---------------
-    "analytics_copurchase_pairs", "graph_pagerank_copurchase",
-    "graph_triangle_participation", "graph_jaccard_link_prediction",
-    "graph_degree_distribution", "dedup_duplicate_clusters",
-    "dedup_cluster_size_histogram", "profile_orders_columns",
-    "quality_referential_integrity", "analytics_funnel_stages",
-    "scd2_apply_changes_incremental", "cdc_incremental_agg_orders",
-    "multimodal_container_probe", "text_tfidf_top_terms",
-    "agg_rollup_orders", "agg_salted_events_by_type",
-    "analytics_event_transitions", "analytics_retention_cohorts",
-    "cdc_orders_snapshot_diff", "dedup_first_event",
-    "join_anti_no_big_order", "join_asof_next_error",
-    "join_semi_active_customers", "join_star_revenue",
-    "quality_key_skew_events", "quality_metrics_lineitem",
-    "quality_psi_value_drift", "reshape_pivot_event_types",
-    "reshape_unpivot_measures", "scalar_math_suite", "scalar_variant_json",
-    "scd2_user_value_history", "sketch_distinct_users_rollup_exact",
-    "text_chunk_documents", "text_pii_redaction", "text_vocabulary_top100",
-    "topk_orders_per_customer", "tpch_q10_returned_items",
-    "tpch_q3_unshipped_revenue", "tpch_q5_local_supplier_volume",
-    "ts_anomaly_zscore", "ts_hierarchical_rollup_daily",
-    "ts_session_windows", "ts_sliding_10m_5m", "ts_tumbling_hourly",
-    "dedup_decontaminate_train", "dedup_edit_distance_pairs",
-    "dedup_normalized_documents", "dedup_span_rewrite_documents",
-    "dedup_split_leakage_audit",
-
-    # -- group 2: oracle-paired, recently driver-certified ----------
+    "graph_pagerank_copurchase", "dedup_duplicate_clusters",
+    "dedup_cluster_size_histogram", "dedup_soft_dedup_weights",
+    "dedup_cluster_map_build", "dedup_duplicate_clusters_probe",
+    "dedup_cluster_size_histogram_probe", "dedup_soft_dedup_weights_probe",
+    "dedup_cluster_map_point_probe", "dedup_token_budget_by_source",
+    "pipeline_embedding_curation", "pipeline_embedding_curation_srp",
     "multimodal_audio_dominant_lag", "multimodal_decoded_avi_stats",
     "multimodal_decoded_bmp_stats", "multimodal_decoded_flac_stats",
     "multimodal_decoded_gif_stats", "multimodal_decoded_mp4_stats",
     "multimodal_decoded_ogg_stats", "multimodal_decoded_png_stats",
-    "multimodal_decoded_ppm_stats", "pipeline_embedding_curation",
-    "pipeline_embedding_curation_srp", "quality_table_checksum_orders",
+    "multimodal_decoded_ppm_stats", "quality_table_checksum_orders",
     "sample_weighted_documents", "sim_cosine_topk",
     "sim_embedding_near_dup_pairs", "sim_knn_label_vote",
     "sim_matryoshka_prefix_rerank", "sim_quantize_int8_stats",
@@ -100,9 +78,11 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "window_distribution_suite", "window_period_change",
     "window_rank_in_group", "window_rolling_avg", "agg_boolean_aggregates",
     "agg_collect_event_types", "agg_mode_orders_priority",
-    "analytics_activity_streaks", "analytics_attribution_last_touch",
-    "analytics_attribution_u_shaped", "analytics_cohort_ltv",
-    "analytics_funnel_conversion_window",
+    "analytics_activity_streaks",
+
+    # -- group 2: oracle-paired, recently driver-certified ----------
+    "analytics_attribution_last_touch", "analytics_attribution_u_shaped",
+    "analytics_cohort_ltv", "analytics_funnel_conversion_window",
     "analytics_interval_union_coverage", "analytics_pareto_orders",
     "analytics_rank_movers", "analytics_rfm_segmentation",
     "analytics_user_lifecycle", "dedup_contamination_report",
@@ -126,16 +106,16 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "agg_case_bucketing", "agg_distinct_counts",
     "agg_having_frequent_customers", "agg_percentiles_lineitem",
     "dedup_cross_source_overlap", "dedup_decontaminate_bloom",
-    "dedup_soft_dedup_weights", "join_asof_tolerance_error",
-    "join_point_in_time_scd2", "join_temporal_validity_intersection",
-    "multimodal_shot_boundaries", "pipeline_media_curation",
-    "pipeline_training_data_prep", "quality_benford_first_digit",
-    "quality_cross_field_violations", "quality_k_anonymity_customers",
-    "quality_mad_anomaly_events", "reshape_denormalize_star",
-    "reshape_union_schema_evolution", "sample_balanced_labels",
-    "sample_corpus_mixture", "sample_stratified_split_embeddings",
-    "scalar_array_suite", "scalar_bitwise_suite", "scalar_nested_suite",
-    "scalar_try_suite", "sim_centroid_drift", "sim_centroid_outlier_filter",
+    "join_asof_tolerance_error", "join_point_in_time_scd2",
+    "join_temporal_validity_intersection", "multimodal_shot_boundaries",
+    "pipeline_media_curation", "pipeline_training_data_prep",
+    "quality_benford_first_digit", "quality_cross_field_violations",
+    "quality_k_anonymity_customers", "quality_mad_anomaly_events",
+    "reshape_denormalize_star", "reshape_union_schema_evolution",
+    "sample_balanced_labels", "sample_corpus_mixture",
+    "sample_stratified_split_embeddings", "scalar_array_suite",
+    "scalar_bitwise_suite", "scalar_nested_suite", "scalar_try_suite",
+    "sim_centroid_drift", "sim_centroid_outlier_filter",
     "sim_label_centroids", "sketch_heavy_hitters_event_types",
     "stats_gini_revenue_concentration", "stats_mann_whitney_value_drift",
     "stats_spearman_value_trend", "text_bpe_encode_fixed_vocab",
@@ -145,12 +125,9 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "ts_seasonal_naive_backtest", "ts_session_windows_dynamic_gap",
     "window_rolling_autocorr", "window_share_of_total", "agg_cube_lineitem",
     "agg_grouping_sets_orders", "agg_pricing_summary",
-    "dedup_cluster_map_build", "dedup_cluster_map_point_probe",
-    "dedup_cluster_size_histogram_probe", "dedup_duplicate_clusters_probe",
     "dedup_exact_documents", "dedup_minhash_lsh_pairs",
     "dedup_ngram_jaccard_topk", "dedup_simhash_fingerprints",
-    "dedup_simhash_hamming_pairs", "dedup_soft_dedup_weights_probe",
-    "dedup_token_budget_by_source", "join_asof_last_error",
+    "dedup_simhash_hamming_pairs", "join_asof_last_error",
     "join_full_outer_user_activity", "join_interval_overlap_orders",
     "join_range_value_bands", "layout_zorder_cells",
     "multimodal_audio_energy", "multimodal_byte_histogram",
@@ -166,6 +143,28 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "tpch_q12_shipmode_priority", "tpch_q16_supplier_part_counts",
     "tpch_q20_potential_promotion", "tpch_q2_min_cost_supplier",
     "ts_ccf_click_purchase", "ts_gap_fill_hourly", "ts_ingestion_staleness",
+    "agg_rollup_orders", "agg_salted_events_by_type",
+    "analytics_copurchase_pairs", "analytics_event_transitions",
+    "analytics_funnel_stages", "analytics_retention_cohorts",
+    "cdc_incremental_agg_orders", "cdc_orders_snapshot_diff",
+    "dedup_decontaminate_train", "dedup_edit_distance_pairs",
+    "dedup_first_event", "dedup_normalized_documents",
+    "dedup_span_rewrite_documents", "dedup_split_leakage_audit",
+    "graph_degree_distribution", "graph_jaccard_link_prediction",
+    "graph_triangle_participation", "join_anti_no_big_order",
+    "join_asof_next_error", "join_semi_active_customers",
+    "join_star_revenue", "multimodal_container_probe",
+    "profile_orders_columns", "quality_key_skew_events",
+    "quality_metrics_lineitem", "quality_psi_value_drift",
+    "quality_referential_integrity", "reshape_pivot_event_types",
+    "reshape_unpivot_measures", "scalar_math_suite", "scalar_variant_json",
+    "scd2_apply_changes_incremental", "scd2_user_value_history",
+    "sketch_distinct_users_rollup_exact", "text_chunk_documents",
+    "text_pii_redaction", "text_tfidf_top_terms", "text_vocabulary_top100",
+    "topk_orders_per_customer", "tpch_q10_returned_items",
+    "tpch_q3_unshipped_revenue", "tpch_q5_local_supplier_volume",
+    "ts_anomaly_zscore", "ts_hierarchical_rollup_daily",
+    "ts_session_windows", "ts_sliding_10m_5m", "ts_tumbling_hourly",
 
     # -- group 3: rows-only by design --------------------------------
     "multimodal_video_shot_boundaries", "pipeline_video_curation",
