@@ -459,10 +459,10 @@ def ks_drift(
         F.sum("_cc").over(w_all).alias("_nc"),
     )
     # nullif guards: a group whose rows all fall in ONE period has
-    # _nr or _nc = 0 — Spark's ANSI-off division yields NULL but
-    # DuckDB's IEEE mode yields Inf/NaN, a latent engine-vs-oracle
-    # divergence. With the guard both engines produce NULL → the
-    # group's ks_d is NULL (no two-sample statistic exists).
+    # _nr or _nc = 0 — unguarded, Spark's ANSI-on division raises
+    # DIVIDE_BY_ZERO and DuckDB's IEEE mode yields Inf/NaN. With the
+    # guard both engines produce NULL → the group's ks_d is NULL (no
+    # two-sample statistic exists).
     d = F.abs(
         F.col("_cumr").cast("double")
         / F.nullif(F.col("_nr").cast("double"), F.lit(0.0))

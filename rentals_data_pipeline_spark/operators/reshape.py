@@ -60,12 +60,14 @@ def parse_period_column(
     formats: tuple[str, ...] = ("yyyy-MM-dd", "yyyy-MM"),
     drop_src: bool = True,
 ) -> Op:
-    """Multi-format date parse: ``coalesce(to_date(s, fmt), ...)``
+    """Multi-format date parse: ``coalesce(try_to_date(s, fmt), ...)``
     (reference: jobs/transform.py:80-87 tolerates monthly and daily
-    column headers)."""
+    column headers). ``try_to_date`` yields NULL for a format that does
+    not match, so the next format is tried; ``to_date`` would raise
+    CANNOT_PARSE_TIMESTAMP under ANSI on."""
 
     def _apply(df: DataFrame) -> DataFrame:
-        parsed = F.coalesce(*[F.to_date(F.col(src_col), f) for f in formats])
+        parsed = F.coalesce(*[F.try_to_date(F.col(src_col), f) for f in formats])
         out = df.withColumn(out_col, parsed)
         return out.drop(src_col) if drop_src else out
 

@@ -247,7 +247,9 @@ def bpe_train(
         .localCheckpoint(eager=True)
     )
     bound = min(driver_bound, max_words + 1)
-    probe = hist.limit(bound).collect()
+    # coalesce(1): one task reads the checkpoint up to the bound, so
+    # the probe is one job at any partition count (as in graph.pagerank)
+    probe = hist.coalesce(1).limit(bound).collect()
     if len(probe) < bound:
         return _driver_train(
             [(r["syms"], r["cnt"]) for r in probe], num_merges, min_pair_count

@@ -832,9 +832,9 @@ c AS (
     FROM g
 )
 SELECT event_type,
-    -- NULLIF: a single-period group divides by zero — NULL in Spark's
-    -- ANSI-off division but Inf/NaN under DuckDB's IEEE mode; the
-    -- guard makes both engines agree on NULL
+    -- NULLIF: a single-period group divides by zero — an error in
+    -- Spark's ANSI-on division and Inf/NaN under DuckDB's IEEE mode;
+    -- the guard makes both engines agree on NULL
     FLOOR(MAX(ABS(CAST(cumr AS DOUBLE) / NULLIF(CAST(nr AS DOUBLE), 0.0)
                   - CAST(cumc AS DOUBLE) / NULLIF(CAST(nc AS DOUBLE), 0.0)))
           * 1000000.0 + 0.5) / 1000000.0 AS ks_d,

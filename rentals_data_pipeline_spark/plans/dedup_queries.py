@@ -1261,7 +1261,7 @@ def dedup_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             RND(
                 F.coalesce("n_contaminated", F.lit(0)).cast("double")
-                / F.col("n_train_docs").cast("double"),
+                / F.nullif(F.col("n_train_docs"), F.lit(0)).cast("double"),
                 4,
             ).alias("contamination_rate"),
         )

@@ -6,9 +6,10 @@ plus scale-oriented defaults the reference leaves implicit:
 
 - AQE on (runtime shuffle coalescing, skew-join splitting, SMJ→BHJ
   demotion) so the same declarative plan survives a 100× scale-up.
-- ANSI off: the engine standardizes on permissive SQL semantics
-  (``x / 0 -> NULL``) so results are stable across Spark 3/4 and the
-  DuckDB oracle; divisions are additionally guarded with ``nullif``.
+- No SQL-mode setting: the session runs Spark 4's ANSI-on default,
+  the same mode the catalog's correctness gate certifies in. Operators that divide
+  or index guard themselves (``nullif``, ``try_element_at``,
+  ``try_to_date``) instead of relying on a permissive session.
 - Arrow enabled for the Pandas-UDF extension surface.
 - The table readers' contract: UTC session time zone and Parquet
   TIMESTAMP(NANOS) read as bigint. It is set here once; nothing on the
@@ -57,7 +58,6 @@ def create_spark_session(
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.ansi.enabled": "false",
         # Time-window starts and date_trunc must align with the tz-naive
         # DuckDB oracle.
         "spark.sql.session.timeZone": "UTC",

@@ -77,6 +77,12 @@ def test_queries_and_oracles_align():
     assert all("SELECT" in sql.upper() for sql in o.values())
 
 
+def test_engine_session_runs_the_gate_sql_mode(spark):
+    """The engine session sets no SQL mode, so it runs Spark 4's ANSI-on
+    default, the mode the correctness gate certifies in."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+
+
 def test_no_decimal_columns_in_oracle_paired_schemas(spark):
     """Driver-typing lint (round-5 red row): the driver fetches the
     DuckDB oracle through pandas, which widens DECIMAL to float64 —

@@ -94,14 +94,11 @@ def test_stats_partitioning_invariant(spark):
 
 def test_ragged_vector_degrades_not_errors(spark):
     """A vector longer than the calibration frame encodes the overflow
-    dims as code 0 (try_element_at), even under ANSI mode."""
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    try:
-        df = spark.createDataFrame([(0, [0.5, 1.0, 2.0])], ["vec_id", "embedding"])
-        out = QZ.quantize_vectors(df, [0.0], [1.0 / 255]).collect()[0]["qvec"]
-        assert out[0] == 128 and out[1] == 0 and out[2] == 0
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", "false")
+    dims as code 0 (try_element_at), where a bare element_at would
+    raise INVALID_ARRAY_INDEX in the engine's ANSI-on session."""
+    df = spark.createDataFrame([(0, [0.5, 1.0, 2.0])], ["vec_id", "embedding"])
+    out = QZ.quantize_vectors(df, [0.0], [1.0 / 255]).collect()[0]["qvec"]
+    assert out[0] == 128 and out[1] == 0 and out[2] == 0
 
 
 def test_null_vector_passes_through(spark):

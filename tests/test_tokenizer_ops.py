@@ -218,6 +218,15 @@ def test_bpe_train_tiers_agree(spark):
         assert driver_tier  # non-trivial table
 
 
+def test_bpe_train_probe_is_one_job(spark, jobs_run):
+    """The tier probe reads the histogram checkpoint (4 partitions under
+    the suite's 4 shuffle partitions) through coalesce(1): one job. A
+    bare limit().collect() scaled up over the partitions in two jobs,
+    so this sub-bound call ran 10 jobs with it."""
+    df = _sennrich_docs(spark)
+    assert jobs_run(lambda: TK.bpe_train(df, num_merges=4)) == 10 - 1
+
+
 def test_bpe_driver_train_matches_reference_large(spark):
     """The driver fold's incremental bookkeeping (inverted index, lazy
     heap, delta counts) equals the naive reference recount on a

@@ -3,6 +3,9 @@
 Runs every catalog query in Spark AND its DuckDB oracle on the same
 parquet, compares row count, column names, and an order-insensitive
 value hash (columns sorted by name, floats rounded for stringification).
+The Spark side runs in the engine session's one SQL mode, Spark 4's
+ANSI-on default: an out-of-bounds ``element_at``, overflow cast or
+unguarded division fails here as it would at the gate.
 Usage: python tools/check_oracle.py [--pandas-oracle] [sf_dir] [query ...]
 
 ``--pandas-oracle`` fetches the oracle through pandas (``.df()``)
@@ -69,15 +72,7 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
-    # Mirror the driver's gate: Spark 4 defaults to ANSI-on and the
-    # driver does not opt out, so the engine's permissive session config
-    # never applies there. Certifying under ANSI-on locally catches
-    # out-of-bounds element_at / overflow casts before the driver does.
-    spark = create_spark_session(
-        "oracle-check",
-        shuffle_partitions=8,
-        extra_conf={"spark.sql.ansi.enabled": "true"},
-    )
+    spark = create_spark_session("oracle-check", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -1,8 +1,8 @@
 """Standing sf0.1 final gate: rows-execute sweep of the FULL catalog.
 
 Runs every catalog query (oracle-paired and rows-only alike) at the
-given sf_dir under ANSI-on — the driver's session mode — and asserts
-each executes to completion. This is the scale-up gate the sf0.01
+given sf_dir in the engine session, whose one SQL mode is Spark 4's
+ANSI-on default, and asserts each executes to completion. This is the scale-up gate the sf0.01
 hash-compare cannot give: ANSI overflow/out-of-bounds errors and
 operator assumptions that only trip on 10x data (bigger groups, longer
 arrays, denser band buckets) surface here. Counts are printed so a
@@ -34,11 +34,7 @@ def main() -> int:
         # a typo must never produce a green "0/0 OK" gate record
         print(f"unknown query names: {sorted(unknown)}")
         return 2
-    spark = create_spark_session(
-        "rows-execute-sweep",
-        shuffle_partitions=32,
-        extra_conf={"spark.sql.ansi.enabled": "true"},
-    )
+    spark = create_spark_session("rows-execute-sweep", shuffle_partitions=32)
     names = [n for n in catalog.QUERIES if not only or n in only]
     failed: list[str] = []
     for name in names:
