@@ -45,28 +45,23 @@ def entry(spark: SparkSession) -> DataFrame:
 # passed via --changed) + (oldest driver certification first, ties by
 # name); group 2 is the rest of the oracle-paired catalog; group 3 is
 # rows-only by design (no_oracle rows>0; golden tests pin semantics).
-# Current rotation: group 0 leads with the 12 oracle-paired queries
-# that reach ``graph.pagerank`` or ``dedup.connected_components``,
-# whose tiering moved inside one entry point that checkpoints its
-# input before the tier probe (the rows-only text_bpe_merges, which
-# reaches the changed ``bpe_train``, stays in group 3 by rule).
+# Current rotation: group 0 leads with dedup_contamination_report,
+# whose contamination rate now divides by nullif(n_train_docs, 0) so
+# an empty corpus yields NULL instead of an ANSI divide error (the
+# rows-only text_bpe_merges, which reaches the changed ``bpe_train``
+# probe, stays in group 3 by rule).
 _CHECK_PRIORITY: tuple[str, ...] = (
-    # generated by: python tools/cert_rotation.py --changed graph_pagerank_copurchase dedup_duplicate_clusters dedup_cluster_size_histogram dedup_soft_dedup_weights dedup_cluster_map_build dedup_duplicate_clusters_probe dedup_cluster_size_histogram_probe dedup_soft_dedup_weights_probe dedup_cluster_map_point_probe dedup_token_budget_by_source pipeline_embedding_curation pipeline_embedding_curation_srp  # history through r14
+    # generated by: python tools/cert_rotation.py --changed dedup_contamination_report  # history through r14
     # -- group 0: this round's 50 driver checks (changed-this-round
     # first, then oldest driver certification first) ---------------
-    "graph_pagerank_copurchase", "dedup_duplicate_clusters",
-    "dedup_cluster_size_histogram", "dedup_soft_dedup_weights",
-    "dedup_cluster_map_build", "dedup_duplicate_clusters_probe",
-    "dedup_cluster_size_histogram_probe", "dedup_soft_dedup_weights_probe",
-    "dedup_cluster_map_point_probe", "dedup_token_budget_by_source",
+    "dedup_contamination_report", "multimodal_audio_dominant_lag",
+    "multimodal_decoded_avi_stats", "multimodal_decoded_bmp_stats",
+    "multimodal_decoded_flac_stats", "multimodal_decoded_gif_stats",
+    "multimodal_decoded_mp4_stats", "multimodal_decoded_ogg_stats",
+    "multimodal_decoded_png_stats", "multimodal_decoded_ppm_stats",
     "pipeline_embedding_curation", "pipeline_embedding_curation_srp",
-    "multimodal_audio_dominant_lag", "multimodal_decoded_avi_stats",
-    "multimodal_decoded_bmp_stats", "multimodal_decoded_flac_stats",
-    "multimodal_decoded_gif_stats", "multimodal_decoded_mp4_stats",
-    "multimodal_decoded_ogg_stats", "multimodal_decoded_png_stats",
-    "multimodal_decoded_ppm_stats", "quality_table_checksum_orders",
-    "sample_weighted_documents", "sim_cosine_topk",
-    "sim_embedding_near_dup_pairs", "sim_knn_label_vote",
+    "quality_table_checksum_orders", "sample_weighted_documents",
+    "sim_cosine_topk", "sim_embedding_near_dup_pairs", "sim_knn_label_vote",
     "sim_matryoshka_prefix_rerank", "sim_quantize_int8_stats",
     "sim_quantized_cosine_topk", "sim_srp_near_dup_pairs",
     "sketch_sliding_distinct_users_exact", "sql_above_customer_avg_orders",
@@ -78,14 +73,14 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "window_distribution_suite", "window_period_change",
     "window_rank_in_group", "window_rolling_avg", "agg_boolean_aggregates",
     "agg_collect_event_types", "agg_mode_orders_priority",
-    "analytics_activity_streaks",
-
-    # -- group 2: oracle-paired, recently driver-certified ----------
-    "analytics_attribution_last_touch", "analytics_attribution_u_shaped",
-    "analytics_cohort_ltv", "analytics_funnel_conversion_window",
+    "analytics_activity_streaks", "analytics_attribution_last_touch",
+    "analytics_attribution_u_shaped", "analytics_cohort_ltv",
+    "analytics_funnel_conversion_window",
     "analytics_interval_union_coverage", "analytics_pareto_orders",
     "analytics_rank_movers", "analytics_rfm_segmentation",
-    "analytics_user_lifecycle", "dedup_contamination_report",
+    "analytics_user_lifecycle",
+
+    # -- group 2: oracle-paired, recently driver-certified ----------
     "dedup_semdedup_embeddings", "dedup_semdedup_incremental",
     "dedup_shared_span_pairs", "flagship_events_daily",
     "multimodal_decoded_wav_stats", "pipeline_curation_funnel_by_source",
@@ -106,16 +101,16 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "agg_case_bucketing", "agg_distinct_counts",
     "agg_having_frequent_customers", "agg_percentiles_lineitem",
     "dedup_cross_source_overlap", "dedup_decontaminate_bloom",
-    "join_asof_tolerance_error", "join_point_in_time_scd2",
-    "join_temporal_validity_intersection", "multimodal_shot_boundaries",
-    "pipeline_media_curation", "pipeline_training_data_prep",
-    "quality_benford_first_digit", "quality_cross_field_violations",
-    "quality_k_anonymity_customers", "quality_mad_anomaly_events",
-    "reshape_denormalize_star", "reshape_union_schema_evolution",
-    "sample_balanced_labels", "sample_corpus_mixture",
-    "sample_stratified_split_embeddings", "scalar_array_suite",
-    "scalar_bitwise_suite", "scalar_nested_suite", "scalar_try_suite",
-    "sim_centroid_drift", "sim_centroid_outlier_filter",
+    "dedup_soft_dedup_weights", "join_asof_tolerance_error",
+    "join_point_in_time_scd2", "join_temporal_validity_intersection",
+    "multimodal_shot_boundaries", "pipeline_media_curation",
+    "pipeline_training_data_prep", "quality_benford_first_digit",
+    "quality_cross_field_violations", "quality_k_anonymity_customers",
+    "quality_mad_anomaly_events", "reshape_denormalize_star",
+    "reshape_union_schema_evolution", "sample_balanced_labels",
+    "sample_corpus_mixture", "sample_stratified_split_embeddings",
+    "scalar_array_suite", "scalar_bitwise_suite", "scalar_nested_suite",
+    "scalar_try_suite", "sim_centroid_drift", "sim_centroid_outlier_filter",
     "sim_label_centroids", "sketch_heavy_hitters_event_types",
     "stats_gini_revenue_concentration", "stats_mann_whitney_value_drift",
     "stats_spearman_value_trend", "text_bpe_encode_fixed_vocab",
@@ -125,9 +120,12 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "ts_seasonal_naive_backtest", "ts_session_windows_dynamic_gap",
     "window_rolling_autocorr", "window_share_of_total", "agg_cube_lineitem",
     "agg_grouping_sets_orders", "agg_pricing_summary",
+    "dedup_cluster_map_build", "dedup_cluster_map_point_probe",
+    "dedup_cluster_size_histogram_probe", "dedup_duplicate_clusters_probe",
     "dedup_exact_documents", "dedup_minhash_lsh_pairs",
     "dedup_ngram_jaccard_topk", "dedup_simhash_fingerprints",
-    "dedup_simhash_hamming_pairs", "join_asof_last_error",
+    "dedup_simhash_hamming_pairs", "dedup_soft_dedup_weights_probe",
+    "dedup_token_budget_by_source", "join_asof_last_error",
     "join_full_outer_user_activity", "join_interval_overlap_orders",
     "join_range_value_bands", "layout_zorder_cells",
     "multimodal_audio_energy", "multimodal_byte_histogram",
@@ -147,17 +145,19 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "analytics_copurchase_pairs", "analytics_event_transitions",
     "analytics_funnel_stages", "analytics_retention_cohorts",
     "cdc_incremental_agg_orders", "cdc_orders_snapshot_diff",
-    "dedup_decontaminate_train", "dedup_edit_distance_pairs",
+    "dedup_cluster_size_histogram", "dedup_decontaminate_train",
+    "dedup_duplicate_clusters", "dedup_edit_distance_pairs",
     "dedup_first_event", "dedup_normalized_documents",
     "dedup_span_rewrite_documents", "dedup_split_leakage_audit",
     "graph_degree_distribution", "graph_jaccard_link_prediction",
-    "graph_triangle_participation", "join_anti_no_big_order",
-    "join_asof_next_error", "join_semi_active_customers",
-    "join_star_revenue", "multimodal_container_probe",
-    "profile_orders_columns", "quality_key_skew_events",
-    "quality_metrics_lineitem", "quality_psi_value_drift",
-    "quality_referential_integrity", "reshape_pivot_event_types",
-    "reshape_unpivot_measures", "scalar_math_suite", "scalar_variant_json",
+    "graph_pagerank_copurchase", "graph_triangle_participation",
+    "join_anti_no_big_order", "join_asof_next_error",
+    "join_semi_active_customers", "join_star_revenue",
+    "multimodal_container_probe", "profile_orders_columns",
+    "quality_key_skew_events", "quality_metrics_lineitem",
+    "quality_psi_value_drift", "quality_referential_integrity",
+    "reshape_pivot_event_types", "reshape_unpivot_measures",
+    "scalar_math_suite", "scalar_variant_json",
     "scd2_apply_changes_incremental", "scd2_user_value_history",
     "sketch_distinct_users_rollup_exact", "text_chunk_documents",
     "text_pii_redaction", "text_tfidf_top_terms", "text_vocabulary_top100",
