@@ -32,7 +32,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from rentals_data_pipeline_spark.operators import window as W
 
 CODE_MAX = 255  # uint8 code range [0, 255]
 
@@ -251,7 +252,11 @@ def _bounded_training_sample(
     """Deterministic id-mod sample with the enforced collect bound.
     ``orderBy(id).limit(bound + 1)`` executes as a TakeOrdered (a
     bounded heap per partition + one driver merge), so even the probe
-    itself never materializes an unbounded row set."""
+    itself never materializes an unbounded row set, and it is one Spark
+    job at any partition count (pinned by
+    tests/test_quantize_ops.py::test_bounded_training_sample_is_one_job)
+    — no ``coalesce(1)``, which would make one task read the whole
+    filtered corpus."""
     rows = (
         df.where(
             F.col(vec_col).isNotNull() & (F.col(id_col) % sample_mod == 0)
@@ -330,7 +335,6 @@ def pq_adc_topk(
     id_col: str = "vec_id",
     code_col: str = "pq_code",
     probe_block_size: int = 8192,
-    persist_codes: bool = True,
 ) -> DataFrame:
     """Approximate top-k by inner product over PQ codes (ADC).
 
@@ -338,43 +342,26 @@ def pq_adc_topk(
     against the UNCOMPRESSED probe vector (asymmetric: only the corpus
     is quantized); each corpus Arrow batch is scored by m table
     lookups + a sum — the corpus scan touches codes only, never raw
-    vectors. Per-batch top-k survivors feed a final per-probe window
-    (the `_topk_gemm` shape, `operators/similarity.py`).
+    vectors. Per-batch top-k survivors feed a final per-probe window.
 
-    The probe side is streamed off ``toLocalIterator`` into blocks of
-    ≤``probe_block_size`` vectors (the `_topk_gemm` probe contract,
-    `operators/similarity.py:209`) — the round-8 audit flagged the
-    previous unbounded ``collect()`` as a driver OOM at 100 TB probe
-    scale. Each block's task closure carries only the RAW unit-
-    normalized probe matrix (8·d bytes/probe); the per-probe LUT
-    (m x n_centroids doubles — ~64x larger than a 64-dim probe at
-    m=16, k=256) is built EXECUTOR-side, once per task, from that
-    matrix and the codebook constant. This matters because the
-    per-block ``mapInPandas`` plans all stay referenced by the union
-    until execution: cumulative driver footprint is the probe matrix
-    itself (the same floor `_topk_gemm` pays — any broadcast approach
-    ships the probes), never the 64x-larger LUTs (round-9 review
-    finding). Blocks partition the probe ids and scoring is per-probe
-    independent, so unioning per-block survivors before the final
-    window is exactly equivalent to one unblocked pass (pinned by
-    tests/test_quantize_ops.py::test_pq_adc_probe_blocking). Each
-    block re-scans the codes relation, so when more than one block is
-    emitted the CALLER'S ``codes`` frame is persisted (MEMORY_AND_DISK
-    — codes are m bytes/vector, ~64x smaller than the raw corpus; the
-    internal projection reads through the cached subtree) and the
-    per-block survivors are combined with a BALANCED union tree, not a
-    left-deep chain: at 10M probes / 1200 blocks the plan stays
-    ~log2(1200) ≈ 11 deep instead of 1200. The persist is registered
-    before any block executes (Spark's CacheManager substitutes cached
-    plans at execution time, so the already-built block plans hit the
-    cache too); it stays pinned for the lifetime of the returned
-    DataFrame — callers done with the result release it with
-    ``codes.unpersist()`` (possible precisely because the persist is
-    on their frame: unpersist is sameResult-matched, non-cascading).
+    The probe side runs through the exact kernel's blocking loop
+    (``similarity._scan_probe_blocks``): blocks of
+    ≤``probe_block_size`` probes, one ``mapInPandas`` over the codes
+    per block, a balanced union tree over the blocks, and no cache —
+    every block re-scans the codes projection. Each block's task
+    closure carries only the RAW unit-normalized probe matrix
+    (8·d bytes/probe); the per-probe LUT (m x n_centroids doubles —
+    ~64x larger than a 64-dim probe at m=16, k=256) is built
+    EXECUTOR-side, once per task, from that matrix and the codebook
+    constant, so the per-block plans the union keeps referenced never
+    hold the LUTs. Blocking is invisible in the result (pinned by
+    tests/test_quantize_ops.py::test_pq_adc_probe_blocking).
     Ranking: raw float64 ADC score desc, match-id tiebreak —
     bit-deterministic given the deterministic codes.
     """
-    from pyspark.sql import Window
+    from rentals_data_pipeline_spark.operators.similarity import (
+        _scan_probe_blocks,
+    )
 
     out_schema = f"{probe_id} bigint, match_id bigint, adc_score double"
     m = len(books)
@@ -384,7 +371,12 @@ def pq_adc_topk(
         F.col(id_col).cast("long").alias("i"), F.col(code_col).alias("c")
     )
 
-    def _block_scorer(pids: np.ndarray, P: np.ndarray):
+    def _block_scorer(block: list):
+        pids = np.array([r[0] for r in block], dtype=np.int64)
+        P = _as_unit_rows(
+            np.stack([np.asarray(r[1], dtype=np.float64) for r in block])
+        )
+
         def _score(batches):
             # lut[p, s, j] = <probe_p restricted to subspace s,
             # centroid j> — built HERE, executor-side, once per task:
@@ -416,68 +408,15 @@ def pq_adc_topk(
 
         return _score
 
-    def _block(ids_buf: list, mat_buf: list) -> tuple:
-        return (
-            np.array(ids_buf, dtype=np.int64),
-            _as_unit_rows(np.stack(mat_buf)),
-        )
-
     probe_src = probes.where(F.col(probe_vec).isNotNull()).select(
         F.col(probe_id).cast("long").alias("i"),
         F.col(probe_vec).cast("array<double>").alias("v"),
     )
-    parts: list = []
-    ids_buf: list = []
-    mat_buf: list = []
-    for r in probe_src.toLocalIterator():
-        ids_buf.append(r[0])
-        mat_buf.append(np.asarray(r[1], dtype=np.float64))
-        if len(ids_buf) >= probe_block_size:
-            parts.append(
-                src.mapInPandas(
-                    _block_scorer(*_block(ids_buf, mat_buf)), out_schema
-                )
-            )
-            ids_buf, mat_buf = [], []
-    if ids_buf:
-        parts.append(
-            src.mapInPandas(
-                _block_scorer(*_block(ids_buf, mat_buf)), out_schema
-            )
-        )
-    if not parts:
-        return codes.sparkSession.createDataFrame([], out_schema)
-    if len(parts) > 1:
-        # multi-block: every block re-scans codes — persist once (the
-        # CacheManager substitutes at execution, so the block plans
-        # built above hit the cache too), and fold the survivors with
-        # a balanced union tree to keep the plan log-depth. Persist
-        # the CALLER'S frame, not the internal projection: unpersist
-        # is sameResult-matched and non-cascading, so caching `src`
-        # would pin memory the caller could never release short of
-        # clearCache() (round-10 review finding). Callers that build
-        # codes internally and return a LAZY result (no handle to
-        # unpersist, e.g. the recall gate query) pass
-        # persist_codes=False and pay the per-block re-scan instead
-        if persist_codes:
-            codes.persist(StorageLevel.MEMORY_AND_DISK)
-    while len(parts) > 1:
-        parts = [
-            parts[i].unionByName(parts[i + 1])
-            if i + 1 < len(parts)
-            else parts[i]
-            for i in range(0, len(parts), 2)
-        ]
-    survivors = parts[0]
-
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("adc_score").desc(), F.col("match_id")
+    survivors = _scan_probe_blocks(
+        probe_src, src, _block_scorer, out_schema, probe_block_size
     )
-    return (
-        survivors.where(F.col(probe_id) != F.col("match_id"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .drop("rn")
+    return survivors.where(F.col(probe_id) != F.col("match_id")).transform(
+        W.top_k_per_group("adc_score", [probe_id], k, tiebreakers=["match_id"])
     )
 
 
@@ -555,8 +494,6 @@ def ivf_pq_topk(
     """
     from rentals_data_pipeline_spark.operators.similarity import ivf_assign_udf
 
-    from pyspark.sql import Window
-
     corpus = corpus.where(F.col(match_vec).isNotNull())
     probes = probes.where(F.col(probe_vec).isNotNull())
     corpus_cells = corpus.select(
@@ -585,13 +522,8 @@ def ivf_pq_topk(
             ).alias("adc_score"),
         )
     )
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("adc_score").desc(), F.col(match_id)
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .drop("rn")
+    return scored.transform(
+        W.top_k_per_group("adc_score", [probe_id], k, tiebreakers=[match_id])
     )
 
 
@@ -739,8 +671,6 @@ def ivf_pq_residual_topk(
     term change."""
     from rentals_data_pipeline_spark.operators.similarity import ivf_assign_udf
 
-    from pyspark.sql import Window
-
     corpus = corpus.where(F.col(match_vec).isNotNull())
     probes = probes.where(F.col(probe_vec).isNotNull())
     enc = ivf_pq_residual_encode(
@@ -765,11 +695,6 @@ def ivf_pq_residual_topk(
             ).alias("adc_score"),
         )
     )
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("adc_score").desc(), F.col(match_id)
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .drop("rn")
+    return scored.transform(
+        W.top_k_per_group("adc_score", [probe_id], k, tiebreakers=[match_id])
     )

@@ -1,32 +1,33 @@
 """Similarity search over embedding columns (array<float>).
 
-Three execution tiers, slow→fast, picked per shape:
-
 - **Column-expression cosine** (``dot``/``cosine``: zip_with +
-  aggregate fold in double): exact semantics spec and fine for small
-  probe×corpus products, but Spark evaluates higher-order array
-  functions interpreted (outside whole-stage codegen) — never put it
-  on an O(n²) path.
-- **Arrow-vectorized kernels** (numpy via pandas_udf /
-  applyInPandas): the hot path for anything batch-×-batch. The
-  all-pairs cosine is a *blocked distributed GEMM*
-  (``all_pairs_cosine_pairs``): vectors are hashed into B blocks, each
-  row replicated to its B+1 (block_i, block_j) groups, and each group
-  computes one numpy matmul — no driver collect, no broadcast, shuffle
-  volume n·d·(B+1). SRP plane projections are one batch×planes matmul
-  per Arrow batch (``srp_band_keys_udf``).
-- **SRP-LSH** buckets vectors by the sign pattern of dot products with
-  deterministic random hyperplanes, banded like MinHash (L bands of r
-  planes; same-bucket in ≥1 band → candidate). Candidate generation is
-  an equi-join on (band, bucket) — near-linear at corpus scale; recall
-  is tunable via (r, L): P(candidate) = 1-(1-p^r)^L, p = 1 - θ/π.
+  aggregate fold in double): the exact semantics spec, evaluated
+  interpreted (outside whole-stage codegen) — fine for per-row
+  scores over small frames, never on an O(n²) path.
+- **Exact top-k** (``brute_force_topk``, ``hard_negative_topk``): one
+  blocked-GEMM kernel. Probes stream to the driver in bounded blocks
+  (``_scan_probe_blocks``, shared with ``quantize.pq_adc_topk``); each
+  corpus Arrow batch is one numpy matmul per block, and only per-batch
+  top-k survivors reach the per-probe window. The all-pairs cosine is
+  a *blocked distributed GEMM* (``all_pairs_cosine_pairs``): vectors
+  are hashed into B blocks, each row replicated to its B+1
+  (block_i, block_j) groups, and each group computes one numpy matmul
+  — no driver collect, no broadcast, shuffle volume n·d·(B+1).
+- **Approximate top-k**: SRP-LSH buckets vectors by the sign pattern
+  of dot products with deterministic random hyperplanes, banded like
+  MinHash (L bands of r planes; same-bucket in ≥1 band → candidate).
+  Candidate generation is an equi-join on (band, bucket) — near-linear
+  at corpus scale; recall is tunable via (r, L): P(candidate) =
+  1-(1-p^r)^L, p = 1 - θ/π. IVF (``ivf_topk``) routes each probe to
+  its nearest coarse cells instead.
 
-Hyperplane components derive from md5 (deterministic across runs and
-engines) rather than an RNG, so every result is exactly reproducible —
-the property the oracle/golden test strategy depends on. Matmul
-accumulation order differs from a sequential fold by ~1e-13 relative;
-all thresholds/ranks are applied to values rounded at 1e-4, so the
-kernels are interchangeable.
+Every top-k frontier is cut by ``window.top_k_per_group`` on (score
+desc, match id asc). Hyperplane components derive from md5
+(deterministic across runs and engines) rather than an RNG, so every
+result is exactly reproducible — the property the oracle/golden test
+strategy depends on. Matmul accumulation order differs from a
+sequential fold by ~1e-13 relative; all thresholds/ranks are applied
+to values rounded at 1e-4, so the matmul and fold forms agree.
 
 Mandated extension surface (BASELINE.json "similarity search"); no
 reference counterpart.
@@ -45,7 +46,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from rentals_data_pipeline_spark.functions.rounding import round_half_up
+from rentals_data_pipeline_spark.operators import window as W
 
 Op = Callable[[DataFrame], DataFrame]
 
@@ -80,70 +81,71 @@ def brute_force_topk(
     probe_vec: str = "probe_vec",
     match_id: str = "match_id",
     match_vec: str = "match_vec",
-    scale: int = 4,
-    kernel: str = "arrow",
     probe_block_size: int = 8192,
 ) -> DataFrame:
-    """Exact top-k by cosine: broadcast the probe set against the corpus
-    (one corpus scan, no shuffle for the join; one small shuffle for the
-    per-probe ranking). Ranking uses the ROUNDED cosine with an id
-    tiebreaker so the top-k frontier is engine-deterministic even when
-    two candidates differ below the rounding scale.
+    """Exact top-k by cosine as a blocked GEMM (``_topk_gemm``): the
+    probe×corpus pair space is never materialized. Ranking uses the
+    cosine ROUNDED half-up at 1e-4 with a match-id tiebreaker, so the
+    top-k frontier is engine-deterministic even when two candidates
+    differ below the rounding scale.
 
-    ``kernel="gemm"`` (the scale path) never materializes the
-    probe×corpus pair space: the probe matrix rides into a
-    ``mapInPandas`` closure in blocks of ≤``probe_block_size`` vectors
-    (streamed off ``toLocalIterator`` — the driver never holds the raw
-    probe Rows, and no single task closure exceeds block_size × dim
-    doubles), each corpus Arrow batch is scored against one probe block
-    per numpy matmul, and only the per-batch top-k per probe survives
-    to the final global window — shuffle volume is n_batches ×
-    |probes| × k rows, not |probes| × |corpus|. Blocks partition the
-    probe set, so the per-probe window sees exactly the survivors it
-    would have seen unblocked. Each block re-scans the corpus: with
-    many blocks, cache the corpus or route to ``ivf_topk``/SRP instead
-    — brute force over a probe set that scales with the corpus is the
-    wrong tier. ``kernel="arrow"`` joins then scores each
-    (probe, candidate) row pairwise; ``kernel="fold"`` is the
-    column-expression spec (zip_with + aggregate fold) — identical
-    rounded output, but interpreted per-row, so keep it off hot paths.
-    (Divergence: a zero-norm vector is null under the fold, NaN under
-    numpy — unreachable on non-zero embeddings.)
+    Each probe block is one numpy matmul per corpus Arrow batch, and
+    only the per-batch top-k per probe survives to the final
+    per-probe window — shuffle volume is n_batches × |probes| × k
+    rows, not |probes| × |corpus|. Every probe block re-scans the
+    corpus (``_scan_probe_blocks``): with many blocks, route to
+    ``ivf_topk``/SRP instead — brute force over a probe set that
+    scales with the corpus is the wrong tier.
 
     NULL vectors (routine in petabyte corpora: failed embedders, late
     columns) carry no similarity signal and are dropped on both sides
-    up front — without this the numpy kernels would abort the stage on
+    up front — without this the numpy kernel would abort the stage on
     the first null Arrow batch.
     """
     probes = probes.where(F.col(probe_vec).isNotNull())
     corpus = corpus.where(F.col(match_vec).isNotNull())
-    if kernel == "gemm":
-        if scale != 4:
-            raise ValueError("gemm kernel rounds at 1e-4 (scale=4)")
-        return _topk_gemm(
-            probes, corpus, k, probe_id, probe_vec, match_id, match_vec,
-            probe_block_size,
-        )
-    if kernel == "arrow":
-        if scale != 4:
-            raise ValueError("arrow kernel rounds at 1e-4 (scale=4)")
-        cos_col = cosine_udf()(F.col(probe_vec), F.col(match_vec))
-    else:
-        cos_col = round_half_up(
-            cosine(as_double(F.col(probe_vec)), as_double(F.col(match_vec))),
-            scale,
-        )
-    scored = (
-        F.broadcast(probes)
-        .join(corpus, F.col(probe_id) != F.col(match_id))
-        .select(probe_id, match_id, cos_col.alias("cosine"))
+    return _topk_gemm(
+        probes, corpus, k, probe_id, probe_vec, match_id, match_vec,
+        probe_block_size,
     )
-    w = Window.partitionBy(probe_id).orderBy(F.col("cosine").desc(), F.col(match_id))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .drop("rn")
-    )
+
+
+def _scan_probe_blocks(
+    probes: DataFrame,
+    corpus: DataFrame,
+    scorer: Callable[[list], Callable],
+    out_schema: str,
+    probe_block_size: int,
+) -> DataFrame:
+    """The probe-blocking loop of the vector top-k kernels: stream
+    ``probes`` off ``toLocalIterator`` into blocks of at most
+    ``probe_block_size`` rows, score each block with one
+    ``corpus.mapInPandas(scorer(block), out_schema)``, and combine the
+    blocks with a balanced union tree (log-depth plan however many
+    blocks). No probes → the empty ``out_schema`` frame.
+
+    Driver residency and task-closure size are bounded per block
+    regardless of |probes|. Each block re-scans ``corpus``; nothing is
+    cached. Blocks partition the probe rows, so as long as scoring is
+    per-probe independent, a per-probe window over the union sees
+    exactly the survivors one unblocked pass would emit."""
+    parts: list[DataFrame] = []
+    block: list = []
+    for r in probes.toLocalIterator():
+        block.append(r)
+        if len(block) >= probe_block_size:
+            parts.append(corpus.mapInPandas(scorer(block), out_schema))
+            block = []
+    if block:
+        parts.append(corpus.mapInPandas(scorer(block), out_schema))
+    if not parts:
+        return corpus.sparkSession.createDataFrame([], out_schema)
+    while len(parts) > 1:
+        parts = [
+            parts[i].unionByName(parts[i + 1]) if i + 1 < len(parts) else parts[i]
+            for i in range(0, len(parts), 2)
+        ]
+    return parts[0]
 
 
 def _topk_gemm(
@@ -158,20 +160,13 @@ def _topk_gemm(
     probe_label: str | None = None,
     match_label: str | None = None,
 ) -> DataFrame:
-    """GEMM tier of ``brute_force_topk``: one (batch × dim) @
-    (dim × block) matmul per corpus Arrow batch per probe block,
-    per-batch top-k per probe (on the ROUNDED cosine with the match-id
-    tiebreaker — the same total order as the final window, so
-    pre-pruning cannot change the global top-k), then a tiny global
-    window over the unioned survivors.
-
-    The probe side is streamed off ``toLocalIterator`` into blocks of
-    ≤``probe_block_size`` vectors, so driver residency and task-closure
-    size are bounded per block regardless of |probes| (round-3 verdict:
-    the previous unbounded ``collect()`` was a multi-GB driver
-    materialization at 100× scale). Blocks partition the probe ids, so
-    unioning per-block survivors before the per-probe window is exactly
-    equivalent to one unblocked pass (pinned by
+    """The exact top-k kernel: one (batch × dim) @ (dim × block)
+    matmul per corpus Arrow batch per probe block
+    (``_scan_probe_blocks``), per-batch top-k per probe (on the
+    ROUNDED cosine with the match-id tiebreaker — the same total order
+    as the final window, so pre-pruning cannot change the global
+    top-k), then one per-probe window over the survivors. Blocking is
+    invisible in the result (pinned by
     tests/test_similarity_ops.py::test_topk_gemm_probe_blocking).
 
     ``probe_label``/``match_label`` (both or neither) turn the kernel
@@ -189,9 +184,17 @@ def _topk_gemm(
     if match_label is not None:
         out_schema += f", {match_label} long"
 
-    def _block_scorer(
-        pids: np.ndarray, pn: np.ndarray, plabs: "np.ndarray | None"
-    ):
+    def _block_scorer(block: list):
+        pids = np.array([r[0] for r in block], dtype=np.int64)
+        pmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in block])
+        plabs = (
+            np.array([r[2] for r in block], dtype=np.int64)
+            if probe_label is not None
+            else None
+        )
+        with np.errstate(divide="ignore", invalid="ignore"):
+            pn = pmat / np.linalg.norm(pmat, axis=1, keepdims=True)
+
         def _score(batches):
             for pdf in batches:
                 if len(pdf) == 0:
@@ -239,53 +242,18 @@ def _topk_gemm(
     corpus_cols = [match_id, match_vec] + (
         [match_label] if match_label is not None else []
     )
-    corpus_kv = corpus.select(*corpus_cols)
     probe_cols = [probe_id, probe_vec] + (
         [probe_label] if probe_label is not None else []
     )
-    block_ids: list[np.ndarray] = []
-    block_mats: list[np.ndarray] = []
-    block_labs: list["np.ndarray | None"] = []
-    ids_buf: list[int] = []
-    mat_buf: list[np.ndarray] = []
-    lab_buf: list[int] = []
-
-    def _flush() -> None:
-        block_ids.append(np.array(ids_buf, dtype=np.int64))
-        block_mats.append(np.stack(mat_buf))
-        block_labs.append(
-            np.array(lab_buf, dtype=np.int64)
-            if probe_label is not None
-            else None
-        )
-
-    for r in probes.select(*probe_cols).toLocalIterator():
-        ids_buf.append(r[0])
-        mat_buf.append(np.asarray(r[1], dtype=np.float64))
-        if probe_label is not None:
-            lab_buf.append(r[2])
-        if len(ids_buf) >= probe_block_size:
-            _flush()
-            ids_buf, mat_buf, lab_buf = [], [], []
-    if ids_buf:
-        _flush()
-    if not block_ids:
-        return corpus.sparkSession.createDataFrame([], out_schema)
-
-    survivors = None
-    for pids, pmat, plabs in zip(block_ids, block_mats, block_labs):
-        with np.errstate(divide="ignore", invalid="ignore"):
-            pn = pmat / np.linalg.norm(pmat, axis=1, keepdims=True)
-        part = corpus_kv.mapInPandas(
-            _block_scorer(pids, pn, plabs), out_schema
-        )
-        survivors = part if survivors is None else survivors.unionByName(part)
-
-    w = Window.partitionBy(probe_id).orderBy(F.col("cosine").desc(), F.col(match_id))
-    return (
-        survivors.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .drop("rn")
+    survivors = _scan_probe_blocks(
+        probes.select(*probe_cols),
+        corpus.select(*corpus_cols),
+        _block_scorer,
+        out_schema,
+        probe_block_size,
+    )
+    return survivors.transform(
+        W.top_k_per_group("cosine", [probe_id], k, tiebreakers=[match_id])
     )
 
 
@@ -595,7 +563,7 @@ def all_pairs_cosine_pairs(
     Cosines are rounded half-up at ``scale`` before thresholding, so
     the result is invariant to summation order and hash-comparable with
     a sequential-fold oracle. Zero-norm vectors produce no pairs (their
-    cosine is undefined — the fold kernel yields NULL, numpy yields
+    cosine is undefined — the ``cosine`` fold yields NULL, numpy yields
     nan; both are excluded by the threshold). NULL vectors are dropped
     up front (no similarity signal; they would abort the numpy stage).
     """
@@ -740,7 +708,7 @@ def adaptive_near_dup_pairs(
 
 def cosine_udf():
     """Arrow-vectorized pairwise cosine (batch of (a, b) rows → one
-    numpy pass), rounded half-up at 1e-4 like the fold kernel."""
+    numpy pass), rounded half-up at 1e-4."""
 
     @F.pandas_udf("double")
     def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -926,13 +894,8 @@ def ivf_probe(
             cosine_udf()(F.col(probe_vec), F.col(match_vec)).alias("cosine"),
         )
     )
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("cosine").desc(), F.col(match_id)
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .drop("rn")
+    return scored.transform(
+        W.top_k_per_group("cosine", [probe_id], k, tiebreakers=[match_id])
     )
 
 

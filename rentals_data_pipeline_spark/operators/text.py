@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from rentals_data_pipeline_spark.functions.rounding import round_half_up
+from rentals_data_pipeline_spark.operators import window as W
 
 Op = Callable[[DataFrame], DataFrame]
 
@@ -345,11 +346,8 @@ def tf_idf_top_terms(
             ).alias("tfidf"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("tfidf").desc(), F.col("token"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
+    return scored.transform(
+        W.top_k_per_group("tfidf", [id_col], k, tiebreakers=["token"])
     )
 
 

@@ -24,11 +24,11 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 from rentals_data_pipeline_spark.functions.rounding import round_half_up as RND
 from rentals_data_pipeline_spark.operators import dedup as DD
 from rentals_data_pipeline_spark.operators import relational as RL
+from rentals_data_pipeline_spark.operators import window as W
 from rentals_data_pipeline_spark.plans.catalog import query
 from rentals_data_pipeline_spark.sources.tables import load_table
 
@@ -207,13 +207,8 @@ def dedup_ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             RND(DD.jaccard(F.col("probe_s"), F.col("s")), 4).alias("jaccard"),
         )
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("jaccard").desc(), F.col("match_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
-        .drop("rn")
+    return scored.transform(
+        W.top_k_per_group("jaccard", ["probe_id"], 3, tiebreakers=["match_id"])
     )
 
 

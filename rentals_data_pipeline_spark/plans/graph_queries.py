@@ -50,13 +50,13 @@ def _pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     a pathological hot basket streams through a self-join instead of
     materializing its pair space in one row (basket_pairs).
 
-    The edge list localCheckpoints before returning: every graph query
-    reads it at least twice (symmetrization alone is two reads; the
-    triangle wedge join three, jaccard five), and without
-    materialization the whole build — fact shuffle, collect_set, width
-    routing — replays once per read. The support-2 edge list is tiny
-    relative to the fact (~1.9k edges at sf0.1), so this is the
-    pagerank edge-checkpoint discipline applied one level down."""
+    The edge list is returned unmaterialized. A caller that reads it
+    more than once (the triangle wedge join three times, jaccard five,
+    the degree symmetrization twice) localCheckpoints it first, or the
+    whole build — fact shuffle, collect_set, width routing — replays
+    once per read; the support-2 edge list is tiny relative to the
+    fact (~1.9k edges at sf0.1). PageRank reads it once: it
+    symmetrizes in one pass and ``pagerank`` checkpoints the result."""
     li = load_table(spark, sf_dir, "lineitem")
     # Materialize the per-order sets BEFORE the width routing: both
     # basket_pairs branches (narrow in-row transform, wide streamed
@@ -76,7 +76,6 @@ def _pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_together"))
         .where(F.col("n_together") >= 2)
         .drop("n_together")
-        .localCheckpoint(eager=True)
     )
 
 
@@ -130,15 +129,20 @@ def graph_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     destination; at 100 TB pre-partitioning the edge list by src makes
     the per-iteration join co-located, and the loop truncates lineage
     on a fixed cadence that five iterations never reach."""
-    edges = _pair_graph(spark, sf_dir)
-    sym = edges.select(
-        F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-    ).unionAll(
-        edges.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-    )
-    # tiered: sub-bound edge lists (this corpus) run the identical
-    # integer recurrence driver-side in one job; larger graphs take
-    # the distributed loop — same bits either way
+    # one read of the edge list emits both directions; pagerank's
+    # checkpoint is the only copy. Tiered: sub-bound edge lists (this
+    # corpus) run the identical integer recurrence driver-side in one
+    # job; larger graphs take the distributed loop — same bits either
+    # way
+    a, b = F.col("part_a"), F.col("part_b")
+    sym = _pair_graph(spark, sf_dir).select(
+        F.explode(
+            F.array(
+                F.struct(a.alias("src"), b.alias("dst")),
+                F.struct(b.alias("src"), a.alias("dst")),
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst")
     return pagerank(sym, iterations=5, damping_pct=85, scale=PR_SCALE)
 
 
@@ -172,7 +176,7 @@ def graph_triangle_participation(spark: SparkSession, sf_dir: str) -> DataFrame:
     community-density primitive. Two hash joins on the half-edge list
     (broadcast here, sort-merge at scale) then an explode of the three
     corners into one map-side-combined count."""
-    pairs = _pair_graph(spark, sf_dir)
+    pairs = _pair_graph(spark, sf_dir).localCheckpoint(eager=True)
     tri = triangle_candidates(pairs)
     return (
         tri.select(
@@ -238,9 +242,9 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
     bounded by the support-2 edge floor (and cappable per node like
     ivf's hot-cell guard). FIVE consumers read the edge list (degree
     agg + both wedge sides + both degree joins' lineage); the
-    _pair_graph checkpoint keeps the build single-evaluation (plan
+    edge checkpoint keeps the build single-evaluation (plan
     audit measured 39 exchanges -> 7 with the materialized edges)."""
-    edges = _pair_graph(spark, sf_dir)
+    edges = _pair_graph(spark, sf_dir).localCheckpoint(eager=True)
     sym = edges.select(
         F.col("part_a").alias("u"), F.col("part_b").alias("v")
     ).unionAll(
@@ -307,7 +311,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     prediction for the wedge/triangle family, power-law check). Two
     tiny aggregations over the edge list; at 100 TB this is the
     pre-flight that decides the hot-cell caps for the wedge joins."""
-    edges = _pair_graph(spark, sf_dir)
+    edges = _pair_graph(spark, sf_dir).localCheckpoint(eager=True)
     sym = edges.select(
         F.col("part_a").alias("u"), F.col("part_b").alias("v")
     ).unionAll(

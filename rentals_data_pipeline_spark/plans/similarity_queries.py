@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from rentals_data_pipeline_spark.functions.rounding import round_half_up as RND
 from rentals_data_pipeline_spark.operators import similarity as SIM
+from rentals_data_pipeline_spark.operators import window as W
 from rentals_data_pipeline_spark.plans.catalog import query
 from rentals_data_pipeline_spark.sources.tables import load_table
 
@@ -85,7 +86,7 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.select(
         F.col("vec_id").alias("match_id"), F.col("embedding").alias("match_vec")
     )
-    return SIM.brute_force_topk(probes, corpus, k=5, kernel="gemm")
+    return SIM.brute_force_topk(probes, corpus, k=5)
 
 
 @query(
@@ -624,7 +625,7 @@ def sim_quantized_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = dq.select(
         F.col("vec_id").alias("match_id"), F.col("dqvec").alias("match_vec")
     )
-    return SIM.brute_force_topk(probes, corpus, k=5, kernel="gemm")
+    return SIM.brute_force_topk(probes, corpus, k=5)
 
 
 @query("sim_pq_adc_topk_recall")  # no SQL oracle: k-means codebooks; golden-tested
@@ -662,13 +663,8 @@ def sim_pq_adc_topk_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.select(
         F.col("vec_id").alias("match_id"), F.col("embedding").alias("match_vec")
     )
-    # persist_codes=False: this query builds codes internally and
-    # returns a LAZY one-row aggregate — there is no handle for a
-    # caller to unpersist, so a multi-block run (>8192 probes) would
-    # pin the cache for the session. The quality gate pays the
-    # per-block codes re-scan instead (round-10 review finding).
-    approx = QZ.pq_adc_topk(probes, codes, books, k=5, persist_codes=False)
-    exact = SIM.brute_force_topk(probes, corpus, k=5, kernel="gemm")
+    approx = QZ.pq_adc_topk(probes, codes, books, k=5)
+    exact = SIM.brute_force_topk(probes, corpus, k=5)
     hits = exact.join(
         approx, ["probe_id", "match_id"], "left_semi"
     )
@@ -770,7 +766,7 @@ def sim_ivf_pq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.select(
         F.col("vec_id").alias("match_id"), F.col("embedding").alias("match_vec")
     )
-    exact = SIM.brute_force_topk(probes, corpus, k=5, kernel="gemm")
+    exact = SIM.brute_force_topk(probes, corpus, k=5)
     raw_books = QZ.train_pq_codebooks(
         emb, "embedding", "vec_id", m=16, k=256, sample_mod=1, iters=10
     )
@@ -859,7 +855,7 @@ def sim_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("match_id"),
         F.col("embedding").alias("match_vec"),
     )
-    topk = SIM.brute_force_topk(probes, corpus, k=10, kernel="gemm")
+    topk = SIM.brute_force_topk(probes, corpus, k=10)
     lab = emb.select("vec_id", "label")
     votes = (
         topk.join(F.broadcast(lab), F.col("match_id") == F.col("vec_id"))
@@ -931,7 +927,7 @@ def sim_matryoshka_prefix_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape. Round-6 rewrite (round-5 verdict item 6): the prefix stage
     was a ``probes.crossJoin(corpus)`` — |probes| x |corpus| ROWS
     materialized through the plan; it now runs through the blocked-GEMM
-    exact top-k kernel (``brute_force_topk(kernel="gemm")`` on the
+    exact top-k kernel (``brute_force_topk`` on the
     16-dim slices), which scores the same pair space as FLOPs inside
     one matmul per Arrow batch and emits only per-batch top-20
     survivors — no cartesian/BroadcastNestedLoop node anywhere in the
@@ -959,9 +955,9 @@ def sim_matryoshka_prefix_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("match_id"),
         F.slice(dv, 1, 16).alias("match_vec"),
     )
-    cand = SIM.brute_force_topk(
-        pre_probes, pre_corpus, k=20, kernel="gemm"
-    ).select("probe_id", "match_id")
+    cand = SIM.brute_force_topk(pre_probes, pre_corpus, k=20).select(
+        "probe_id", "match_id"
+    )
 
     def cos(a, b):
         return RND(
@@ -971,8 +967,6 @@ def sim_matryoshka_prefix_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             4,
         )
-
-    from pyspark.sql import Window as W8
 
     full = (
         cand.join(
@@ -993,13 +987,8 @@ def sim_matryoshka_prefix_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             cos(F.col("probe_full"), F.col("match_full")).alias("cosine"),
         )
     )
-    w_full = W8.partitionBy("probe_id").orderBy(
-        F.col("cosine").desc(), "match_id"
-    )
-    return (
-        full.withColumn("rn", F.row_number().over(w_full))
-        .where(F.col("rn") <= 5)
-        .select("probe_id", "match_id", "cosine")
+    return full.transform(
+        W.top_k_per_group("cosine", ["probe_id"], 5, tiebreakers=["match_id"])
     )
 
 

@@ -180,3 +180,22 @@ def test_basket_pairs_hot_basket_matches_self_join(spark):
     )
     assert got == want
     assert len([p for p in got if p[0] >= 2000]) == 600 * 599 // 2
+
+
+def test_pagerank_query_materializes_edges_once(spark, jobs_run):
+    """graph_pagerank_copurchase symmetrizes the unmaterialized pair
+    edges in one pass and lets ``pagerank`` checkpoint them: 7 Spark
+    jobs per call at sf0.001, one fewer than checkpointing the edges
+    before symmetrizing (8)."""
+    from rentals_data_pipeline_spark.plans.graph_queries import (
+        graph_pagerank_copurchase,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    graph_pagerank_copurchase(spark, sf).collect()  # warm the table load
+    rows: list = []
+    n_jobs = jobs_run(
+        lambda: rows.extend(graph_pagerank_copurchase(spark, sf).collect())
+    )
+    assert n_jobs == 7
+    assert len(rows) == 200

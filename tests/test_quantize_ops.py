@@ -187,8 +187,9 @@ def test_pq_adc_retrieval_stays_in_cluster(spark):
 def test_pq_adc_probe_blocking(spark):
     """A probe set larger than probe_block_size must stream in blocks
     and return EXACTLY the unblocked result (scores included) — the
-    bounded-probe contract the round-8 audit demanded. Also pins that
-    empty probes return an empty frame without touching the codes."""
+    bounded-probe contract the round-8 audit demanded — without
+    caching the caller's codes. Also pins that empty probes return an
+    empty frame without touching the codes."""
     df = _clustered_corpus(spark)
     books = QZ.train_pq_codebooks(df, m=4, k=8, iters=10)
     codes = QZ.pq_encode(df, books)
@@ -207,16 +208,28 @@ def test_pq_adc_probe_blocking(spark):
     }
     assert one_pass == blocked
     assert len({p for p, _, _ in one_pass}) == 20
-    # multi-block persists the CALLER'S codes frame (round-10 review:
-    # caching the internal projection would be unreleasable — unpersist
-    # is sameResult-matched and non-cascading), so the documented
-    # release path actually works
-    assert codes.storageLevel.useMemory or codes.storageLevel.useDisk
-    codes.unpersist()
+    # every block re-scans the codes: a multi-block call leaves no
+    # cache on the caller's frame
     assert not (codes.storageLevel.useMemory or codes.storageLevel.useDisk)
     empty = QZ.pq_adc_topk(probes.where(F.lit(False)), codes, books, k=3)
     assert empty.count() == 0
     assert empty.columns == ["probe_id", "match_id", "adc_score"]
+
+
+def test_bounded_training_sample_is_one_job(spark, jobs_run):
+    """The training-sample probe ``orderBy(id).limit(bound + 1)`` plans
+    as a TakeOrderedAndProject: one job over a multi-partition
+    checkpoint, where a bare limit scales up one job per round."""
+    df = _clustered_corpus(spark).repartition(3).localCheckpoint(eager=True)
+    assert df.rdd.getNumPartitions() >= 3
+    rows: list = []
+    n_jobs = jobs_run(
+        lambda: rows.extend(
+            QZ._bounded_training_sample(df, "embedding", "vec_id", 1, 1000)
+        )
+    )
+    assert n_jobs == 1
+    assert [r["i"] for r in rows] == list(range(80))
 
 
 def test_pq_catalog_recall_row(spark):

@@ -3,12 +3,16 @@
 from __future__ import annotations
 
 import math
+import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from rentals_data_pipeline_spark.operators import similarity as SIM
 from rentals_data_pipeline_spark.plans import similarity_queries as SQ
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -48,9 +52,15 @@ def test_brute_force_topk(spark):
 
 
 def test_brute_force_topk_kernels_agree(spark):
-    """The Arrow kernel and the fold (spec) kernel produce the same
-    rounded frontier at sf0.001."""
+    """The GEMM kernel reproduces the DuckDB fold oracle of
+    ``sim_cosine_topk`` at sf0.001: the same rounded frontier, compared
+    by the order-insensitive value hash of tools/check_oracle.py."""
+    import duckdb
+
+    import __spark_entry__  # noqa: F401 — populates the catalog registry
+    from rentals_data_pipeline_spark.plans.catalog import ORACLE_SQL
     from rentals_data_pipeline_spark.sources.tables import load_table
+    from tools.check_oracle import value_hash
 
     emb = load_table(spark, SF_DIR, "embeddings")
     probes = emb.where(F.col("vec_id") % 50 == 0).select(
@@ -59,47 +69,51 @@ def test_brute_force_topk_kernels_agree(spark):
     corpus = emb.select(
         F.col("vec_id").alias("match_id"), F.col("embedding").alias("match_vec")
     )
-    arrow = sorted(map(tuple, SIM.brute_force_topk(probes, corpus, k=5).collect()))
-    fold = sorted(
-        map(tuple, SIM.brute_force_topk(probes, corpus, k=5, kernel="fold").collect())
+    got = SIM.brute_force_topk(probes, corpus, k=5)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{SF_DIR}/embeddings.parquet')"
     )
-    gemm = sorted(
-        map(tuple, SIM.brute_force_topk(probes, corpus, k=5, kernel="gemm").collect())
-    )
-    assert arrow == fold
-    assert arrow == gemm
+    res = con.execute(ORACLE_SQL["sim_cosine_topk"])
+    want = res.fetchall()
+    assert len(want) == 50
+    assert value_hash(
+        [tuple(r) for r in got.collect()], got.columns
+    ) == value_hash(want, [d[0] for d in res.description])
 
 
 def test_topk_gemm_small_batches_prune_correctly(spark):
     """Per-batch top-k pre-pruning must not change the global frontier:
     force many tiny Arrow batches so the top-k for each probe is
-    scattered across batches, and compare against the join kernel."""
+    scattered across batches, and compare against the default batch
+    size."""
+    from rentals_data_pipeline_spark.sources.tables import load_table
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    probes = emb.where(F.col("vec_id") % 50 == 0).select(
+        F.col("vec_id").alias("probe_id"),
+        F.col("embedding").alias("probe_vec"),
+    )
+    corpus = emb.select(
+        F.col("vec_id").alias("match_id"),
+        F.col("embedding").alias("match_vec"),
+    ).repartition(8)
+
+    def topk() -> list:
+        return sorted(
+            map(tuple, SIM.brute_force_topk(probes, corpus, k=5).collect())
+        )
+
+    default = topk()
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
-        from rentals_data_pipeline_spark.sources.tables import load_table
-
-        emb = load_table(spark, SF_DIR, "embeddings")
-        probes = emb.where(F.col("vec_id") % 50 == 0).select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("embedding").alias("probe_vec"),
-        )
-        corpus = emb.select(
-            F.col("vec_id").alias("match_id"),
-            F.col("embedding").alias("match_vec"),
-        ).repartition(8)
-        gemm = sorted(
-            map(
-                tuple,
-                SIM.brute_force_topk(probes, corpus, k=5, kernel="gemm").collect(),
-            )
-        )
-        join = sorted(
-            map(tuple, SIM.brute_force_topk(probes, corpus, k=5).collect())
-        )
-        assert gemm == join
+        tiny = topk()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    assert tiny == default
+    assert len(default) == 50
 
 
 def test_topk_gemm_probe_blocking(spark):
@@ -121,14 +135,14 @@ def test_topk_gemm_probe_blocking(spark):
         map(
             tuple,
             SIM.brute_force_topk(
-                probes, corpus, k=5, kernel="gemm", probe_block_size=3
+                probes, corpus, k=5, probe_block_size=3
             ).collect(),
         )
     )
     single = sorted(
         map(
             tuple,
-            SIM.brute_force_topk(probes, corpus, k=5, kernel="gemm").collect(),
+            SIM.brute_force_topk(probes, corpus, k=5).collect(),
         )
     )
     assert blocked == single
@@ -155,7 +169,7 @@ def test_topk_gemm_empty_probes(spark):
     corpus = spark.createDataFrame(
         [(1, [1.0, 0.0])], "match_id long, match_vec array<float>"
     )
-    assert SIM.brute_force_topk(probes, corpus, k=3, kernel="gemm").count() == 0
+    assert SIM.brute_force_topk(probes, corpus, k=3).count() == 0
 
 
 def test_similarity_kernels_ignore_null_vectors(spark):
@@ -168,10 +182,9 @@ def test_similarity_kernels_ignore_null_vectors(spark):
         [(1, [1.0, 0.1]), (2, None), (3, [0.0, 1.0])],
         "match_id long, match_vec array<double>",
     )
-    for kernel in ("gemm", "arrow", "fold"):
-        rows = SIM.brute_force_topk(probes, corpus, k=2, kernel=kernel).collect()
-        assert sorted(r["match_id"] for r in rows) == [1, 3]
-        assert all(r["probe_id"] == 0 for r in rows)
+    rows = SIM.brute_force_topk(probes, corpus, k=2).collect()
+    assert sorted(r["match_id"] for r in rows) == [1, 3]
+    assert all(r["probe_id"] == 0 for r in rows)
     emb = spark.createDataFrame(
         [(1, [1.0, 0.1]), (2, None), (3, [1.0, 0.2])],
         "vec_id long, embedding array<double>",
