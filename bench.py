@@ -124,8 +124,8 @@ HEADLINE = [
     # video-curation path rides on
     "multimodal_video_shot_boundaries",
     # round-8 TPC-H completion: the two heaviest new shapes over the
-    # derived partsupp — Q2's decorrelated grouped-min self-join and
-    # Q11's aggregate-vs-broadcast-total threshold
+    # derived partsupp — Q2's min-cost frontier (a partitioned MIN
+    # window) and Q11's aggregate-vs-broadcast-total threshold
     "tpch_q2_min_cost_supplier",
     "tpch_q11_important_stock",
     # round-9 additions: the MP4 sample-table decode path (box walk +

@@ -30,7 +30,7 @@ filter sits in the parquet scan (PushedFilters).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from rentals_data_pipeline_spark.functions.rounding import round_half_up as RND
@@ -465,12 +465,14 @@ WHERE p_brand = 'Brand#13'
 def tpch_q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 (small-quantity-order revenue): revenue lost to
     below-20%-of-average-quantity orders for one brand. The correlated
-    scalar AVG decorrelates into a per-part aggregate of the SAME
-    brand-filtered line set (the subquery only constrains l_partkey,
-    so pre-filtering by the broadcast part dimension is semantics-
-    preserving and avoids a second full fact scan), joined back on the
-    part key. Quantities are integral doubles — the avg is exact at
-    any summation order, so the 0.2·avg cut is engine-stable."""
+    scalar AVG becomes ``0.2 * avg(l_quantity) OVER (PARTITION BY
+    l_partkey)`` over the ONE brand-filtered line set (the subquery
+    only constrains l_partkey, so pre-filtering by the broadcast part
+    dimension is semantics-preserving): lineitem is scanned once and
+    the per-part cut needs no aggregate joined back, so the plan has
+    one partkey exchange and no sort-merge join. Quantities are
+    integral doubles — the avg is exact at any summation order, so the
+    0.2·avg cut is engine-stable."""
     pb = (
         load_table(spark, sf_dir, "part")
         .where(F.col("p_brand") == "Brand#13")
@@ -479,12 +481,13 @@ def tpch_q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice"
     )
-    li_b = li.join(F.broadcast(pb), li.l_partkey == pb.p_partkey)
-    cuts = li_b.groupBy(F.col("l_partkey").alias("cut_key")).agg(
-        (F.lit(0.2) * F.avg("l_quantity")).alias("qty_cut")
-    )
     return (
-        li_b.join(cuts, li_b.l_partkey == cuts.cut_key)
+        li.join(F.broadcast(pb), li.l_partkey == pb.p_partkey)
+        .withColumn(
+            "qty_cut",
+            F.lit(0.2)
+            * F.avg("l_quantity").over(Window.partitionBy("l_partkey")),
+        )
         .where(F.col("l_quantity") < F.col("qty_cut"))
         .agg(
             RND(
@@ -921,12 +924,16 @@ partsupp AS (
 """
 
 
-def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The derived partsupp relation (see module comment). Shape at
-    scale: 4 rows per part from a pure map over the part scan; the
-    1-row supplier count broadcasts (the BNLJ carrier the plan audit
-    whitelists)."""
-    part = load_table(spark, sf_dir, "part").select("p_partkey")
+def _partsupp(spark: SparkSession, sf_dir: str, part: DataFrame) -> DataFrame:
+    """The derived partsupp rows of the caller's ``part`` frame (see
+    module comment): 4 rows per part, each carrying the frame's
+    non-key columns through. Every row is a pure function of its own
+    partkey, so a query that filters parts first derives only the rows
+    it can output — exact for every caller, since no partsupp
+    predicate or aggregate reads another part's rows. Shape at scale: a
+    pure map over the part scan; the 1-row supplier count broadcasts
+    (the BNLJ carrier the plan audit whitelists)."""
+    carried = [c for c in part.columns if c != "p_partkey"]
     s_cnt = load_table(spark, sf_dir, "supplier").agg(
         F.count(F.lit(1)).alias("s_cnt")
     )
@@ -935,6 +942,7 @@ def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "p_partkey",
             "s_cnt",
+            *carried,
             F.explode(F.array(*[F.lit(k) for k in range(4)])).alias("k"),
         )
         .select(
@@ -948,6 +956,7 @@ def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
             (((F.col("p_partkey") * 7 + F.col("k") * 13) % 99900) + 100)
             .cast("long")
             .alias("ps_cost_cents"),
+            *carried,
         )
     )
 
@@ -981,44 +990,44 @@ LIMIT 100
 def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 (minimum-cost supplier) over the derived partsupp:
     for '%ARD'-type parts in five sizes, the EUROPE supplier(s) offering the
-    region's minimum supply cost, ordered by account balance. The
-    correlated MIN subquery becomes a grouped-min self-join (the
-    standard decorrelation); supplier/nation/region broadcast, and the
-    min-cost join keys on (partkey, exact integer cents) so the
-    frontier can never flip on float drift. Cost leaves as cents/100
-    only in the projection."""
-    ps = _partsupp(spark, sf_dir)
+    region's minimum supply cost, ordered by account balance. The part
+    predicate runs first and partsupp is derived from the kept parts
+    only (the correlated MIN reads only its own part's rows, and only
+    kept parts reach the output). Supplier/nation/region broadcast, and
+    the correlated MIN becomes ``min(ps_cost_cents) OVER (PARTITION BY
+    ps_partkey)`` over that one EUROPE set, so the set is evaluated
+    once instead of feeding both a grouped MIN and the join back to
+    it. The frontier compares exact integer cents (ties stay, as in
+    the oracle), so it can never flip on float drift. Cost leaves as
+    cents/100 only in the projection."""
+    part = (
+        load_table(spark, sf_dir, "part")
+        .where(
+            F.col("p_size").isin(3, 15, 23, 36, 45)
+            & F.col("p_type").like("%ARD")
+        )
+        .select("p_partkey", "p_brand", "p_type")
+    )
+    ps = _partsupp(spark, sf_dir, part)
     sup = load_table(spark, sf_dir, "supplier")
     nat = load_table(spark, sf_dir, "nation")
     reg = load_table(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE")
-    eu = (
+    return (
         ps.join(F.broadcast(sup), ps.ps_suppkey == sup.s_suppkey)
         .join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
         .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
-        .select("ps_partkey", "ps_suppkey", "ps_cost_cents", "s_name",
-                "s_acctbal", "n_name")
-    )
-    best = eu.groupBy(F.col("ps_partkey").alias("b_partkey")).agg(
-        F.min("ps_cost_cents").alias("min_cents")
-    )
-    part = load_table(spark, sf_dir, "part").where(
-        F.col("p_size").isin(3, 15, 23, 36, 45)
-        & F.col("p_type").like("%ARD")
-    )
-    return (
-        eu.join(
-            best,
-            (eu.ps_partkey == best.b_partkey)
-            & (eu.ps_cost_cents == best.min_cents),
+        .withColumn(
+            "min_cents",
+            F.min("ps_cost_cents").over(Window.partitionBy("ps_partkey")),
         )
-        .join(F.broadcast(part), eu.ps_partkey == part.p_partkey)
-        .orderBy(F.col("s_acctbal").desc(), "n_name", "s_name", "p_partkey")
+        .where(F.col("ps_cost_cents") == F.col("min_cents"))
+        .orderBy(F.col("s_acctbal").desc(), "n_name", "s_name", "ps_partkey")
         .limit(100)
         .select(
             "s_acctbal",
             "s_name",
             "n_name",
-            "p_partkey",
+            F.col("ps_partkey").alias("p_partkey"),
             "p_brand",
             "p_type",
             (F.col("ps_cost_cents").cast("double") / 100.0).alias(
@@ -1058,7 +1067,9 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a broadcast 1-row total folded FROM the per-part aggregate
     (sum of per-key sums == grand sum), so the partsupp build is not
     re-evaluated for the threshold. One shuffle (partkey agg)."""
-    ps = _partsupp(spark, sf_dir)
+    ps = _partsupp(
+        spark, sf_dir, load_table(spark, sf_dir, "part").select("p_partkey")
+    )
     sup = load_table(spark, sf_dir, "supplier")
     nat7 = load_table(spark, sf_dir, "nation").where(
         F.col("n_name") == "NATION_7"
@@ -1111,20 +1122,24 @@ def tpch_q16_supplier_part_counts(
     suppliers. The absent s_comment '%Complaints%' exclusion is
     adapted to negative account balance — same NOT-IN-subquery shape,
     executed as a broadcast anti-join (keys are non-null, so NOT IN
-    and anti-join agree). Part broadcasts into the 4-rows-per-part
-    derived relation; one shuffle for the distinct-count."""
-    ps = _partsupp(spark, sf_dir)
-    part = load_table(spark, sf_dir, "part").where(
-        (F.col("p_brand") != "Brand#45")
-        & ~F.col("p_type").like("MEDIUM%")
-        & F.col("p_size").isin(1, 9, 14, 19, 23, 36, 45, 49)
+    and anti-join agree). Partsupp is derived from the filtered parts
+    only, carrying (brand, type, size), so part is scanned once and
+    never joined back; one shuffle for the distinct-count."""
+    part = (
+        load_table(spark, sf_dir, "part")
+        .where(
+            (F.col("p_brand") != "Brand#45")
+            & ~F.col("p_type").like("MEDIUM%")
+            & F.col("p_size").isin(1, 9, 14, 19, 23, 36, 45, 49)
+        )
+        .select("p_partkey", "p_brand", "p_type", "p_size")
     )
+    ps = _partsupp(spark, sf_dir, part)
     flagged = load_table(spark, sf_dir, "supplier").where(
         F.col("s_acctbal") < 0
     ).select("s_suppkey")
     return (
-        ps.join(F.broadcast(part), ps.ps_partkey == part.p_partkey)
-        .join(
+        ps.join(
             F.broadcast(flagged),
             ps.ps_suppkey == flagged.s_suppkey,
             "left_anti",
@@ -1169,17 +1184,19 @@ def tpch_q20_potential_promotion(
 ) -> DataFrame:
     """TPC-H Q20 (potential part promotion) over the derived partsupp:
     suppliers holding more than half a year's shipped quantity of any
-    'red%' part they supply. The nested IN subqueries become joins:
-    the 1996 per-(part, supplier) shipped quantity aggregates once
+    'red%' part they supply. Partsupp is derived from the 'red%' part
+    keys only (the IN-list filter needs no join back to part). The
+    other nested IN subqueries become joins: the 1996 per-(part,
+    supplier) shipped quantity aggregates once
     (exact decimal), the half-stock comparison runs as
     ``availqty * 2 > qty`` in decimals (no 0.5 float), and the
     distinct candidate suppliers semi-join back to supplier. The
     original correlates against lineitem absence as false — the inner
     join reproduces that (no shipped rows, no candidate row)."""
-    ps = _partsupp(spark, sf_dir)
     red = load_table(spark, sf_dir, "part").where(
         F.col("p_name").like("red%")
     ).select("p_partkey")
+    ps = _partsupp(spark, sf_dir, red)
     li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
@@ -1188,8 +1205,7 @@ def tpch_q20_potential_promotion(
         F.sum(F.col("l_quantity").cast("decimal(12,2)")).alias("qty")
     )
     cand = (
-        ps.join(F.broadcast(red), ps.ps_partkey == red.p_partkey)
-        .join(
+        ps.join(
             shipped,
             (ps.ps_partkey == shipped.l_partkey)
             & (ps.ps_suppkey == shipped.l_suppkey),

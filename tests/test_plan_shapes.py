@@ -260,6 +260,43 @@ def test_tpch_q21_no_fact_self_join(spark):
     assert s["bhj"] <= 3, s["plan"]
 
 
+def _scans_of(plan: str, table: str) -> int:
+    return len(re.findall(rf"FileScan[^\n]*/{table}\.parquet", plan))
+
+
+def test_tpch_q2_one_eu_evaluation(spark):
+    """Q2's correlated MIN is a window over ONE evaluation of the
+    EUROPE partsupp set, derived from the already-filtered parts: no
+    grouped MIN sort-merged back, and part is scanned once."""
+    s = _shape(spark, "tpch_q2_min_cost_supplier")
+    assert s["smj"] == 0, s["plan"]
+    assert _scans_of(s["plan"], "part") == 1, s["plan"]
+
+
+def test_tpch_q17_window_cut(spark):
+    """Q17's per-part 0.2*avg cut is a window over the one brand-
+    filtered line set: no per-part aggregate joined back, and lineitem
+    is scanned once."""
+    s = _shape(spark, "tpch_q17_small_quantity")
+    assert s["smj"] == 0, s["plan"]
+    assert _scans_of(s["plan"], "lineitem") == 1, s["plan"]
+
+
+@pytest.mark.parametrize(
+    "name,jobs",
+    [("tpch_q2_min_cost_supplier", 7), ("tpch_q17_small_quantity", 4)],
+)
+def test_tpch_window_frontier_warm_jobs(spark, jobs_run, name, jobs):
+    """At catalog scale factors a query's CPU is set by its job and
+    AQE-stage count (driver scheduling, re-planning, broadcast builds),
+    not by executor work. The aggregate-and-join-back forms ran 12 (Q2)
+    and 6 (Q17) warm jobs; the window forms run 7 and 4. The first run
+    warms the footer-schema memo so only the query's own jobs count."""
+    fn = entry.queries()[name]
+    fn(spark, SF_DIR).collect()
+    assert jobs_run(lambda: fn(spark, SF_DIR).collect()) == jobs
+
+
 def test_pareto_prune_before_global_window(spark):
     """The skyline's single-partition exact window must consume the
     bucket-pruned candidate set: the bucket running-max join stays a

@@ -66,12 +66,14 @@ BNLJ_WHITELIST = {
     "sim_ivf_pq_residual_recall": 3,  # A/B harness: three 1-row totals
     # round 8 — the derived partsupp relation crossJoins the 1-row
     # supplier COUNT (stride/modulus input). The pre-execution plan
-    # re-prints that carrier once per CONSUMER of the shared subtree
-    # (Q2's eu feeds the grouped-min and the output join; Q11's
-    # per-part aggregate feeds both the output filter and the 1-row
-    # total fold, which is itself a third carrier) — at runtime AQE's
-    # ReusedExchange dedups the duplicated groupBy exchange.
-    "tpch_q2_min_cost_supplier": 2,
+    # re-prints that carrier once per CONSUMER of the shared subtree.
+    # Q2's EUROPE set has one consumer since its correlated MIN became
+    # a partitioned window (no grouped-min joined back), so it carries
+    # one; Q11's per-part aggregate feeds both the output filter and
+    # the 1-row total fold, which is itself a third carrier — at
+    # runtime AQE's ReusedExchange dedups the duplicated groupBy
+    # exchange.
+    "tpch_q2_min_cost_supplier": 1,
     "tpch_q11_important_stock": 3,
     "tpch_q16_supplier_part_counts": 1,
     "tpch_q20_potential_promotion": 1,
