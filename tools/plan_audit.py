@@ -67,8 +67,8 @@ BNLJ_WHITELIST = {
     # round 8 — the derived partsupp relation crossJoins the 1-row
     # supplier COUNT (stride/modulus input). The pre-execution plan
     # re-prints that carrier once per CONSUMER of the shared subtree.
-    # Q2's EUROPE set has one consumer since its correlated MIN became
-    # a partitioned window (no grouped-min joined back), so it carries
+    # Q2's EUROPE set has one consumer (its correlated MIN is a
+    # partitioned window, not a grouped MIN joined back), so it carries
     # one; Q11's per-part aggregate feeds both the output filter and
     # the 1-row total fold, which is itself a third carrier — at
     # runtime AQE's ReusedExchange dedups the duplicated groupBy
