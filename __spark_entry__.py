@@ -45,28 +45,26 @@ def entry(spark: SparkSession) -> DataFrame:
 # passed via --changed) + (oldest driver certification first, ties by
 # name); group 2 is the rest of the oracle-paired catalog; group 3 is
 # rows-only by design (no_oracle rows>0; golden tests pin semantics).
-# Current rotation: group 0 leads with the eleven oracle-paired queries
-# on the one top-k path (the blocked-GEMM ``brute_force_topk``, the
-# shared probe-blocking loop, ``window.top_k_per_group`` tails) and on
-# the co-purchase pair graph, whose checkpoint moved to its multi-read
-# callers so PageRank materializes its edges once.
+# Current rotation: group 0 leads with the five TPC-H queries whose
+# plans changed: Q2 and Q17 apply their correlated MIN/AVG as a
+# partitioned window, and Q2/Q11/Q16/Q20 derive partsupp from the part
+# frame each passes to ``_partsupp``.
 _CHECK_PRIORITY: tuple[str, ...] = (
-    # generated by: python tools/cert_rotation.py --changed sim_cosine_topk sim_hard_negatives sim_quantized_cosine_topk sim_knn_label_vote sim_matryoshka_prefix_rerank graph_pagerank_copurchase graph_triangle_participation graph_jaccard_link_prediction graph_degree_distribution text_tfidf_top_terms dedup_ngram_jaccard_topk  # history through r14
+    # generated by: python tools/cert_rotation.py --changed tpch_q2_min_cost_supplier tpch_q11_important_stock tpch_q16_supplier_part_counts tpch_q17_small_quantity tpch_q20_potential_promotion  # history through r14
     # -- group 0: this round's 50 driver checks (changed-this-round
     # first, then oldest driver certification first) ---------------
-    "sim_cosine_topk", "sim_hard_negatives", "sim_quantized_cosine_topk",
-    "sim_knn_label_vote", "sim_matryoshka_prefix_rerank",
-    "graph_pagerank_copurchase", "graph_triangle_participation",
-    "graph_jaccard_link_prediction", "graph_degree_distribution",
-    "text_tfidf_top_terms", "dedup_ngram_jaccard_topk",
-    "multimodal_audio_dominant_lag", "multimodal_decoded_avi_stats",
-    "multimodal_decoded_bmp_stats", "multimodal_decoded_flac_stats",
-    "multimodal_decoded_gif_stats", "multimodal_decoded_mp4_stats",
-    "multimodal_decoded_ogg_stats", "multimodal_decoded_png_stats",
-    "multimodal_decoded_ppm_stats", "pipeline_embedding_curation",
-    "pipeline_embedding_curation_srp", "quality_table_checksum_orders",
-    "sample_weighted_documents", "sim_embedding_near_dup_pairs",
-    "sim_quantize_int8_stats", "sim_srp_near_dup_pairs",
+    "tpch_q2_min_cost_supplier", "tpch_q11_important_stock",
+    "tpch_q16_supplier_part_counts", "tpch_q17_small_quantity",
+    "tpch_q20_potential_promotion", "multimodal_audio_dominant_lag",
+    "multimodal_decoded_avi_stats", "multimodal_decoded_bmp_stats",
+    "multimodal_decoded_flac_stats", "multimodal_decoded_gif_stats",
+    "multimodal_decoded_mp4_stats", "multimodal_decoded_ogg_stats",
+    "multimodal_decoded_png_stats", "multimodal_decoded_ppm_stats",
+    "pipeline_embedding_curation", "pipeline_embedding_curation_srp",
+    "quality_table_checksum_orders", "sample_weighted_documents",
+    "sim_cosine_topk", "sim_embedding_near_dup_pairs", "sim_knn_label_vote",
+    "sim_matryoshka_prefix_rerank", "sim_quantize_int8_stats",
+    "sim_quantized_cosine_topk", "sim_srp_near_dup_pairs",
     "sketch_sliding_distinct_users_exact", "sql_above_customer_avg_orders",
     "sql_correlated_exists_customers", "sql_cte_window_topn",
     "sql_in_subquery_supplier_nations", "sql_lateral_topk_orders",
@@ -78,24 +76,24 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "agg_collect_event_types", "agg_mode_orders_priority",
     "analytics_activity_streaks", "analytics_attribution_last_touch",
     "analytics_attribution_u_shaped", "analytics_cohort_ltv",
+    "analytics_funnel_conversion_window",
+    "analytics_interval_union_coverage",
 
     # -- group 2: oracle-paired, recently driver-certified ----------
-    "analytics_funnel_conversion_window",
-    "analytics_interval_union_coverage", "analytics_pareto_orders",
-    "analytics_rank_movers", "analytics_rfm_segmentation",
-    "analytics_user_lifecycle", "dedup_contamination_report",
-    "dedup_semdedup_embeddings", "dedup_semdedup_incremental",
-    "dedup_shared_span_pairs", "flagship_events_daily",
-    "multimodal_decoded_wav_stats", "pipeline_curation_funnel_by_source",
-    "pipeline_semantic_curation", "sample_dsir_importance",
-    "stats_chi_square_events", "stats_equal_frequency_binning",
-    "stats_group_confidence_intervals", "stats_ks_value_drift",
-    "stats_regression_events", "stats_weighted_median_orders",
-    "stats_winsorized_events", "text_corpus_bigrams",
-    "text_duplicated_ngram_fraction", "text_gopher_quality_rules",
-    "text_repetition_filters", "text_unigram_logprob",
-    "tpch_q13_customer_distribution", "tpch_q14_promo_effect",
-    "tpch_q15_top_supplier", "tpch_q17_small_quantity",
+    "analytics_pareto_orders", "analytics_rank_movers",
+    "analytics_rfm_segmentation", "analytics_user_lifecycle",
+    "dedup_contamination_report", "dedup_semdedup_embeddings",
+    "dedup_semdedup_incremental", "dedup_shared_span_pairs",
+    "flagship_events_daily", "multimodal_decoded_wav_stats",
+    "pipeline_curation_funnel_by_source", "pipeline_semantic_curation",
+    "sample_dsir_importance", "stats_chi_square_events",
+    "stats_equal_frequency_binning", "stats_group_confidence_intervals",
+    "stats_ks_value_drift", "stats_regression_events",
+    "stats_weighted_median_orders", "stats_winsorized_events",
+    "text_corpus_bigrams", "text_duplicated_ngram_fraction",
+    "text_gopher_quality_rules", "text_repetition_filters",
+    "text_unigram_logprob", "tpch_q13_customer_distribution",
+    "tpch_q14_promo_effect", "tpch_q15_top_supplier",
     "tpch_q18_large_volume_customer", "tpch_q19_discounted_revenue",
     "tpch_q21_suppliers_kept_waiting", "tpch_q22_global_sales_opportunity",
     "tpch_q4_priority_checking", "tpch_q6_forecast_revenue",
@@ -126,41 +124,42 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "dedup_cluster_map_build", "dedup_cluster_map_point_probe",
     "dedup_cluster_size_histogram_probe", "dedup_duplicate_clusters_probe",
     "dedup_exact_documents", "dedup_minhash_lsh_pairs",
-    "dedup_simhash_fingerprints", "dedup_simhash_hamming_pairs",
-    "dedup_soft_dedup_weights_probe", "dedup_token_budget_by_source",
-    "join_asof_last_error", "join_full_outer_user_activity",
-    "join_interval_overlap_orders", "join_range_value_bands",
-    "layout_zorder_cells", "multimodal_audio_energy",
-    "multimodal_byte_histogram", "multimodal_frame_sample",
-    "multimodal_metadata", "multimodal_resize_grid",
-    "pipeline_corpus_curation", "sample_deterministic_documents",
-    "sample_split_documents", "sample_stratified_events",
-    "scalar_date_suite", "scalar_json_extract", "scalar_string_suite",
-    "setops_customer_cohorts", "sketch_distinct_overlap_users_exact",
-    "sketch_histogram_quantiles", "sort_global_top10_orders",
-    "stats_ab_welch_value", "text_fingerprints", "text_language_id",
-    "text_quality_score", "text_token_stats", "text_word_concentration",
-    "tpch_q11_important_stock", "tpch_q12_shipmode_priority",
-    "tpch_q16_supplier_part_counts", "tpch_q20_potential_promotion",
-    "tpch_q2_min_cost_supplier", "ts_ccf_click_purchase",
-    "ts_gap_fill_hourly", "ts_ingestion_staleness", "agg_rollup_orders",
-    "agg_salted_events_by_type", "analytics_copurchase_pairs",
-    "analytics_event_transitions", "analytics_funnel_stages",
-    "analytics_retention_cohorts", "cdc_incremental_agg_orders",
-    "cdc_orders_snapshot_diff", "dedup_cluster_size_histogram",
-    "dedup_decontaminate_train", "dedup_duplicate_clusters",
-    "dedup_edit_distance_pairs", "dedup_first_event",
-    "dedup_normalized_documents", "dedup_span_rewrite_documents",
-    "dedup_split_leakage_audit", "join_anti_no_big_order",
-    "join_asof_next_error", "join_semi_active_customers",
-    "join_star_revenue", "multimodal_container_probe",
-    "profile_orders_columns", "quality_key_skew_events",
-    "quality_metrics_lineitem", "quality_psi_value_drift",
-    "quality_referential_integrity", "reshape_pivot_event_types",
-    "reshape_unpivot_measures", "scalar_math_suite", "scalar_variant_json",
+    "dedup_ngram_jaccard_topk", "dedup_simhash_fingerprints",
+    "dedup_simhash_hamming_pairs", "dedup_soft_dedup_weights_probe",
+    "dedup_token_budget_by_source", "join_asof_last_error",
+    "join_full_outer_user_activity", "join_interval_overlap_orders",
+    "join_range_value_bands", "layout_zorder_cells",
+    "multimodal_audio_energy", "multimodal_byte_histogram",
+    "multimodal_frame_sample", "multimodal_metadata",
+    "multimodal_resize_grid", "pipeline_corpus_curation",
+    "sample_deterministic_documents", "sample_split_documents",
+    "sample_stratified_events", "scalar_date_suite", "scalar_json_extract",
+    "scalar_string_suite", "setops_customer_cohorts", "sim_hard_negatives",
+    "sketch_distinct_overlap_users_exact", "sketch_histogram_quantiles",
+    "sort_global_top10_orders", "stats_ab_welch_value", "text_fingerprints",
+    "text_language_id", "text_quality_score", "text_token_stats",
+    "text_word_concentration", "tpch_q12_shipmode_priority",
+    "ts_ccf_click_purchase", "ts_gap_fill_hourly", "ts_ingestion_staleness",
+    "agg_rollup_orders", "agg_salted_events_by_type",
+    "analytics_copurchase_pairs", "analytics_event_transitions",
+    "analytics_funnel_stages", "analytics_retention_cohorts",
+    "cdc_incremental_agg_orders", "cdc_orders_snapshot_diff",
+    "dedup_cluster_size_histogram", "dedup_decontaminate_train",
+    "dedup_duplicate_clusters", "dedup_edit_distance_pairs",
+    "dedup_first_event", "dedup_normalized_documents",
+    "dedup_span_rewrite_documents", "dedup_split_leakage_audit",
+    "graph_degree_distribution", "graph_jaccard_link_prediction",
+    "graph_pagerank_copurchase", "graph_triangle_participation",
+    "join_anti_no_big_order", "join_asof_next_error",
+    "join_semi_active_customers", "join_star_revenue",
+    "multimodal_container_probe", "profile_orders_columns",
+    "quality_key_skew_events", "quality_metrics_lineitem",
+    "quality_psi_value_drift", "quality_referential_integrity",
+    "reshape_pivot_event_types", "reshape_unpivot_measures",
+    "scalar_math_suite", "scalar_variant_json",
     "scd2_apply_changes_incremental", "scd2_user_value_history",
     "sketch_distinct_users_rollup_exact", "text_chunk_documents",
-    "text_pii_redaction", "text_vocabulary_top100",
+    "text_pii_redaction", "text_tfidf_top_terms", "text_vocabulary_top100",
     "topk_orders_per_customer", "tpch_q10_returned_items",
     "tpch_q3_unshipped_revenue", "tpch_q5_local_supplier_volume",
     "ts_anomaly_zscore", "ts_hierarchical_rollup_daily",
