@@ -52,7 +52,11 @@ def drop_null_rows(columns: list[str]) -> Op:
 def dedup_keep_first(keys: list[str], order_by: list[Column]) -> Op:
     """Deterministic keep-first dedup: row_number over keys ordered by
     explicit tiebreakers, keep row 1. One shuffle, same as
-    dropDuplicates, but reproducible under any partitioning."""
+    dropDuplicates, but reproducible under any partitioning. An input
+    already hash-clustered on a subset of ``keys`` is reused, not
+    reshuffled, so a caller can cluster once for this dedup and a later
+    window on that subset. The map-side top-1 then has no exchange to
+    prune ahead of: duplicates ride the caller's shuffle."""
 
     def _apply(df: DataFrame) -> DataFrame:
         w = Window.partitionBy(*keys).orderBy(*order_by)

@@ -8,6 +8,11 @@ names, id/measure columns and partition keys come from a config dict
 chaining — each stage a pure DataFrame function from the operator
 library.
 
+Shuffles follow the flow's two key families, not its four windows:
+the dedup and the lag share one exchange on the region key, and
+``run_etl`` gives the rank and the partitioned sink one exchange on the
+sink's partition columns.
+
 Orchestration note: the reference wraps this in a 4-task Airflow DAG
 with per-task sessions (dags/rental_pipeline_dag.py:172-175). Here the
 runner is plain Python — one session, stages composed lazily so
@@ -54,43 +59,66 @@ DEFAULT_CONFIG: dict = {
 _TYPES = {"int": T.IntegerType(), "string": T.StringType(), "double": T.DoubleType()}
 
 
-def build_stages(
-    wide_columns: list[str], config: dict = DEFAULT_CONFIG
-) -> list[Callable[[DataFrame], DataFrame]]:
-    """The pipeline as a list of pure DataFrame→DataFrame stages."""
+Stage = tuple[str, Callable[[DataFrame], DataFrame]]
+
+
+def _series_stages(wide_columns: list[str], config: dict) -> list[Stage]:
+    """Every stage up to the in-group rank, as (name, stage) pairs."""
     ids = config["id_columns"]
     value_cols = date_like_columns(wide_columns)
-    period, value = config["period_col"], config["value_col"]
+    region, period, value = (
+        config["region_key"], config["period_col"], config["value_col"]
+    )
     projection = {c: _TYPES[t] for c, t in ids.items()}
     projection.update({c: T.DoubleType() for c in value_cols})
     return [
         # enforce schema: select+cast ids, all period columns → double
-        R.project_cast(projection),
+        ("project_cast", R.project_cast(projection)),
         # wide → long
-        RS.unpivot(
-            ids=list(ids), values=value_cols, var_col="period_str", value_col=value
+        (
+            "unpivot",
+            RS.unpivot(
+                ids=list(ids), values=value_cols, var_col="period_str",
+                value_col=value,
+            ),
         ),
         # tolerant period parse (monthly or daily headers)
-        RS.parse_period_column("period_str", out_col=period),
+        ("parse_period", RS.parse_period_column("period_str", out_col=period)),
         # clean before windows: null measures would pollute lag/rank
-        R.drop_null_rows([value]),
+        ("drop_null_values", R.drop_null_rows([value])),
+        # one shuffle for the region family: hash(region) satisfies both
+        # the dedup's (region, period) window and the lag's (region) one
+        ("cluster_region", lambda df: df.repartition(region)),
         # deterministic keep-first dedup on the series key
-        R.dedup_keep_first(
-            [config["region_key"], period], [F.col(value).asc_nulls_first()]
+        (
+            "dedup_keep_first",
+            R.dedup_keep_first([region, period], [F.col(value).asc_nulls_first()]),
         ),
-        # signature analytics: period-over-period % change + in-group rank
-        W.pct_change(
-            value, [config["region_key"]], period, out_col=config["change_col"]
-        ),
-        W.rank_in_group(
-            value, [config["group_key"], period], out_col=config["rank_col"]
+        # signature analytics: period-over-period % change (reuses the
+        # dedup's sort on (region, period))
+        (
+            "pct_change",
+            W.pct_change(value, [region], period, out_col=config["change_col"]),
         ),
     ]
 
 
+def build_stages(
+    wide_columns: list[str], config: dict = DEFAULT_CONFIG
+) -> list[Stage]:
+    """The pipeline as (name, stage) pairs of pure DataFrame→DataFrame
+    functions, in order."""
+    rank = W.rank_in_group(
+        config["value_col"],
+        [config["group_key"], config["period_col"]],
+        out_col=config["rank_col"],
+    )
+    return _series_stages(wide_columns, config) + [("rank_in_group", rank)]
+
+
 def run_pipeline(df: DataFrame, config: dict = DEFAULT_CONFIG) -> DataFrame:
     """Compose all stages over an already-loaded wide DataFrame."""
-    for stage in build_stages(df.columns, config):
+    for _, stage in build_stages(df.columns, config):
         df = df.transform(stage)
     return df
 
@@ -109,23 +137,13 @@ def run_pipeline_observed(
 
     Returns (df, observations): after any action on ``df``, each
     ``observations[stage_name].get`` is a dict of that stage's
-    metrics. Stage names follow build_stages order.
+    metrics, keyed by the names ``build_stages`` gives.
     """
     from pyspark.sql import Observation
 
     value_col = config["value_col"]
     obs: dict[str, Observation] = {}
-    stages = build_stages(df.columns, config)
-    names = [
-        "project_cast",
-        "unpivot",
-        "parse_period",
-        "drop_null_values",
-        "dedup_keep_first",
-        "pct_change",
-        "rank_in_group",
-    ]
-    for name, stage in zip(names, stages):
+    for name, stage in build_stages(df.columns, config):
         df = df.transform(stage)
         o = Observation(f"stage_{name}")
         metrics = [F.count(F.lit(1)).alias("rows")]
@@ -138,6 +156,31 @@ def run_pipeline_observed(
         df = df.observe(o, *metrics)
         obs[name] = o
     return df, obs
+
+
+def _etl_frame(wide: DataFrame, config: dict) -> DataFrame:
+    """``run_pipeline``'s rows plus ``year``, hash-partitioned on the
+    sink's ``partition_by`` when the rank can share that shuffle.
+
+    ``year`` is a function of the period, so ranking over (group, year,
+    period) equals ranking over (group, period). When every partition
+    column is one of those keys, one exchange on the partition columns
+    serves the rank, and the sink finds its input already partitioned
+    exactly as it would repartition it: Spark drops the sink's shuffle,
+    and the rank's sort also orders the writer's partitions.
+    """
+    group, period = config["group_key"], config["period_col"]
+    partition_by = config["partition_by"]
+    df = wide
+    for _, stage in _series_stages(wide.columns, config):
+        df = df.transform(stage)
+    df = df.withColumn("year", F.year(F.col(period)))
+    rank_keys = [group, "year", period]
+    if set(partition_by) <= set(rank_keys):
+        df = df.repartition(*partition_by)
+    return df.transform(
+        W.rank_in_group(config["value_col"], rank_keys, out_col=config["rank_col"])
+    )
 
 
 def default_quality_checks(config: dict = DEFAULT_CONFIG) -> list[Q.DataQualityCheck]:
@@ -268,12 +311,10 @@ def run_etl(
     def _etl() -> dict[str, object]:
         fixed = {c: _TYPES[t] for c, t in config["id_columns"].items()}
         wide = read_csv_typed(spark, input_csv, fixed_fields=fixed)
-        result = run_pipeline(wide, config)
         written = write_partitioned_parquet(
-            result,
+            _etl_frame(wide, config),
             output_path,
             partition_by=config["partition_by"],
-            derived={"year": F.year(F.col(config["period_col"]))},
         )
         checks = default_quality_checks(config)
         if min_rows is not None:  # test-size override

@@ -35,6 +35,16 @@ def write_partitioned_parquet(
     ``derived`` adds computed partition columns first (the reference
     derives ``year`` from ``month`` — jobs/io_utils.py:101).
 
+    An input already hash-partitioned on exactly ``partition_by`` is
+    written without a second shuffle (``target_files_per_partition``
+    unset): Spark drops the repartition
+    below, and a sort of the input that starts with ``partition_by``
+    also serves the writer's ordering. A caller that shuffles upstream
+    anyway (a window over a superset of the partition columns)
+    clusters there on ``partition_by`` and derives the partition
+    columns itself, before that shuffle; ``derived`` adds new columns
+    after it, so the sink would shuffle again.
+
     File-size control — the reference's ``coalesce(1)`` intent
     (jobs/io_utils.py:102: "exactly one tidy file per dir") without its
     single-task write:

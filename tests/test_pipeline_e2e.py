@@ -4,6 +4,8 @@ tests/test_transform.py:130-154): wide CSV in → partitioned parquet out
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -79,6 +81,84 @@ def test_run_etl_end_to_end(spark, wide_csv, tmp_path):
     # partition pruning works: reading one state dir only
     ny = spark.read.parquet(out_path).filter(F.col("StateName") == "NY")
     assert ny.count() == 6
+
+
+def _pipeline_rows_with_year(spark, wide_csv):
+    """``run_pipeline``'s rows plus ``year``, as sorted tuples, and
+    their column order."""
+    from rentals_data_pipeline_spark.sources.csv import read_csv_typed
+
+    fixed = {c: P._TYPES[t] for c, t in P.DEFAULT_CONFIG["id_columns"].items()}
+    wide = read_csv_typed(spark, wide_csv, fixed_fields=fixed)
+    df = P.run_pipeline(wide).withColumn("year", F.year("month"))
+    return sorted(map(tuple, df.collect())), df.columns
+
+
+def _sink_frame(spark, wide_csv, out_path, monkeypatch, config):
+    """Run ``run_etl`` and return the frame its sink shuffles and
+    writes: the sink's input repartitioned on the partition columns."""
+    seen = {}
+    write = P.write_partitioned_parquet
+
+    def spy(df, path, partition_by, **kw):
+        seen["frame"] = df.repartition(*partition_by)
+        return write(df, path, partition_by, **kw)
+
+    monkeypatch.setattr(P, "write_partitioned_parquet", spy)
+    P.run_etl(spark, wide_csv, out_path, config=config, min_rows=5)
+    return seen["frame"]
+
+
+@pytest.mark.parametrize(
+    "partition_by,exchanges", [(["StateName", "year"], 2), (["RegionName"], 3)]
+)
+def test_run_etl_one_exchange_per_key_family(
+    spark, wide_csv, tmp_path, monkeypatch, partition_by, exchanges
+):
+    """The reference ETL has two key families: the region (dedup and
+    lag) and (StateName, year) (rank and partitioned sink). One hash
+    exchange per family, not one per window plus the sink's
+    repartition (four): the sink's repartition is dropped because its
+    input is already partitioned on exactly its columns. Partition
+    columns the rank cannot key on (RegionName) keep the rank's own
+    exchange and the sink's: three. Either way the rank is the
+    (StateName, month) rank."""
+    config = {**P.DEFAULT_CONFIG, "partition_by": partition_by}
+    frame = _sink_frame(spark, wide_csv, str(tmp_path / "out"), monkeypatch, config)
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == exchanges, plan
+    rows, cols = _pipeline_rows_with_year(spark, wide_csv)
+    assert sorted(map(tuple, frame.select(*cols).collect())) == rows
+
+
+def test_run_etl_warm_jobs(spark, wide_csv, tmp_path, jobs_run):
+    """Warm Spark jobs of one ETL run with one exchange per key family:
+    7 (an exchange per window plus the sink's shuffle runs 9). The first
+    run warms the session so only the ETL's own jobs count."""
+
+    def run(name):
+        P.run_etl(spark, wide_csv, str(tmp_path / name), min_rows=5)
+
+    run("warm")
+    assert jobs_run(lambda: run("timed")) == 7
+
+
+def test_run_etl_one_file_per_partition_dir(spark, wide_csv, tmp_path):
+    """The layout the reference's coalesce(1) meant: one parquet file
+    per StateName=…/year=… dir, holding ``run_pipeline``'s rows plus
+    ``year``."""
+    out_path = tmp_path / "processed"
+    P.run_etl(spark, wide_csv, str(out_path), min_rows=5)
+    dirs = sorted(
+        d.relative_to(out_path).as_posix()
+        for d in out_path.glob("StateName=*/year=*")
+    )
+    assert dirs == ["StateName=CA/year=2024", "StateName=NY/year=2024"]
+    for d in dirs:
+        assert len(list((out_path / d).glob("*.parquet"))) == 1, d
+    rows, cols = _pipeline_rows_with_year(spark, wide_csv)
+    got = spark.read.parquet(str(out_path)).select(*cols)
+    assert sorted(map(tuple, got.collect())) == rows
 
 
 def test_retry_transient_failure_then_success():
