@@ -16,18 +16,23 @@ MP4 (ISO-BMFF box walk + stbl sample table, round 9) — and FLAC-in-Ogg
 (round 10: page walk + lacing-table packet reassembly into the native
 FLAC decoder). Compressed inter-frame AV codecs (H.264, Vorbis/Opus)
 stay environment-gated — no PIL/ffmpeg in this container — and surface
-as ``unsupported codec`` error ROWS, never task failures. Everything Spark-side is real and
-tested:
+as ``unsupported codec`` error ROWS, never task failures. Everything
+Spark-side is real and tested:
 
 - ``pack_media``: documents → media-shaped rows (payload bytes + typed
   metadata). Deterministic fake payloads (utf-8 of the text) so every
   downstream result is golden-testable.
 - ``media_metadata``: pure built-ins (length/md5/hex-magic) — the
   cheap metadata pass that never deserializes payloads to Python.
-- ``byte_histogram_features``: the deterministic stand-in feature
-  extractor — 16-bin byte histogram per payload via ``mapInPandas``
-  (numpy over Arrow batches; the exact shape a real embedding/decoder
-  UDF has: binary in, fixed-dim float vector out).
+- ``pack_*`` (ten containers), ``byte_histogram_features``,
+  ``resize_grid`` and ``audio_energy``: one-row-in, one-row-out
+  Python stages, all on ONE Arrow row-map (``_row_map``) — the only
+  place these stages cross to pandas. A packer is its container
+  constants plus an ``encode(utf8_bytes) -> bytes``.
+- ``decode_media``, ``probe_media``, ``decode_video_frames``: real
+  decoders whose bad-blob policy (NULL, ``CodecError``, decoder bug →
+  error row, never a task failure) is the one function
+  ``_guarded``.
 - ``frame_sample``: every-k-th fixed-size byte frame, as built-in
   array-of-binary slicing — the frame-sampling plan shape for video,
   minus the codec.
@@ -40,10 +45,15 @@ pruning does this for free when media sits in its own column).
 
 from __future__ import annotations
 
+import io
+import struct
+import wave
+import zlib
 from collections.abc import Callable, Iterator
-from typing import TYPE_CHECKING
+from typing import TYPE_CHECKING, Any
 
-from pyspark.sql import Column, DataFrame
+import numpy as np
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -58,27 +68,94 @@ MEDIA_TYPES = ("image", "audio", "video")
 
 N_HISTOGRAM_BINS = 16
 
+_DOUBLES = T.ArrayType(T.DoubleType())
 
-def _widen(df: DataFrame, enabled: bool = True) -> DataFrame:
-    """Ensure a CPU-bound Arrow stage gets at least core-count
-    parallelism. The pack/decode pipelines are pure-Python per-blob
-    work: their wall-clock is partitions-bounded, and a small corpus
-    read from one parquet file arrives as ONE partition — 31 of 32
-    cores idle through the whole decode (measured 16.3s -> 0.8s at
-    sf0.1 for the Ogg FLAC stats query). Widening is CONDITIONAL: at
-    real scale the scan already supplies >= defaultParallelism
-    partitions and this is a no-op, so the shuffle (tiny doc_id+text
-    rows — applied at the PACK stage, upstream of blob construction,
-    never on packed payloads) only happens where it pays. Pack
-    factories expose ``widen=False`` for multi-branch certification
-    pipelines whose sliver branches already run concurrently through
-    a union: there the shuffle+task overhead exceeds the win, and
-    Spark does not reuse the repartition exchange across branch
-    subtrees (both measured in plans/multimodal_queries.py). The probe
-    mechanics (streaming/exchange guards, JVM-internal partition
-    count) live in the ONE shared copy,
-    functions/widen.py::widen_if_narrow."""
-    return widen_if_narrow(df, enabled)
+
+def _row_map(
+    df: DataFrame,
+    id_col: str,
+    in_col: str,
+    out_field: T.StructField,
+    fn: Callable[[Any], Any],
+    null_out: Any = None,
+) -> DataFrame:
+    """``(id, in_col)`` → ``(id long, out_field)`` in one Arrow-batched
+    ``mapInPandas``: ``fn`` maps each non-NULL value, a NULL maps to
+    ``null_out``. The one Python boundary of every one-row-in,
+    one-row-out media stage."""
+    out_schema = T.StructType([T.StructField(id_col, T.LongType()), out_field])
+
+    def _map(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        for pdf in batches:
+            yield pd.DataFrame({
+                id_col: pdf[id_col],
+                out_field.name: [
+                    null_out if v is None else fn(v) for v in pdf[in_col]
+                ],
+            })
+
+    return df.select(id_col, in_col).mapInPandas(_map, out_schema)
+
+
+def _pack_stage(
+    encode: Callable[[bytes], bytes],
+    id_col: str,
+    text_col: str,
+    out_payload: str,
+    widen: bool,
+) -> Op:
+    """The pack stage every ``pack_*`` shares: ``(id, text)`` →
+    ``(id long, payload binary)``, payload = ``encode(utf-8 of the
+    text)``, NULL text → NULL payload (the decode stage surfaces it as
+    an error row, never a task failure).
+
+    ``widen`` gives the CPU-bound Python stage at least core-count
+    parallelism (functions/widen.py::widen_if_narrow). Pack/decode
+    pipelines are pure-Python per-blob work whose wall-clock is
+    partitions-bounded, and a small corpus read from one parquet file
+    arrives as ONE partition — 31 of 32 cores idle through the whole
+    decode (measured 16.3s -> 0.8s at sf0.1 for the Ogg FLAC stats
+    query). Widening is CONDITIONAL: at real scale the scan already
+    supplies >= defaultParallelism partitions and it is a no-op, so
+    the shuffle (tiny doc_id+text rows, upstream of blob construction,
+    never on packed payloads) only happens where it pays.
+    ``widen=False`` is for multi-branch certification pipelines whose
+    sliver branches already run concurrently through a union: there
+    the shuffle+task overhead exceeds the win, and Spark does not
+    reuse the repartition exchange across branch subtrees (both
+    measured in plans/multimodal_queries.py)."""
+    field = T.StructField(out_payload, T.BinaryType())
+
+    def _apply(df: DataFrame) -> DataFrame:
+        return _row_map(
+            widen_if_narrow(df.select(id_col, text_col), widen),
+            id_col, text_col, field, lambda t: encode(t.encode("utf-8")),
+        )
+
+    return _apply
+
+
+def _guarded(
+    verb: str, fn: Callable[[bytes], Any], payload: Any
+) -> tuple[Any, str | None]:
+    """The bad-blob rule every decoder shares: ``(fn(payload), None)``,
+    or ``(None, error)`` — ``"null payload"`` for NULL, the message of
+    a ``CodecError`` (corrupt/foreign/unsupported blob), and
+    ``"<verb> failure: <Type>: <msg>"`` for any other exception: at
+    100 TB one hostile blob tripping a decoder bug must not kill the
+    stage, so it becomes a distinguishable error row instead."""
+    from rentals_data_pipeline_spark.operators.codecs import CodecError
+
+    if payload is None:
+        return None, "null payload"
+    try:
+        return fn(bytes(payload)), None
+    except CodecError as e:
+        return None, str(e)
+    except Exception as e:  # noqa: BLE001 — a decoder bug is a row too
+        return None, f"{verb} failure: {type(e).__name__}: {str(e)[:120]}"
 
 
 def pack_media(
@@ -136,42 +213,19 @@ def pack_wav(
     NULL text packs to NULL payload (the decode stage must surface it
     as an error row, never a task failure). Arrow-batched mapInPandas;
     stdlib ``wave`` writes the 44-byte header per row — cheap relative
-    to payload bytes, and the only Python-side packing in the module.
+    to payload bytes.
     """
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField(out_payload, T.BinaryType()),
-        ]
-    )
 
-    def _pack(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import io
-        import wave as wavelib
+    def encode(data: bytes) -> bytes:
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(1)
+            w.setsampwidth(1)
+            w.setframerate(sample_rate)
+            w.writeframes(data)
+        return buf.getvalue()
 
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for text in pdf[text_col]:
-                if text is None:
-                    payloads.append(None)
-                    continue
-                buf = io.BytesIO()
-                with wavelib.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(1)
-                    w.setframerate(sample_rate)
-                    w.writeframes(text.encode("utf-8"))
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame({id_col: pdf[id_col], out_payload: payloads})
-
-    def _apply(df: DataFrame) -> DataFrame:
-        return _widen(df.select(id_col, text_col), widen).mapInPandas(
-            _pack, out_schema
-        )
-
-    return _apply
+    return _pack_stage(encode, id_col, text_col, out_payload, widen)
 
 
 def pack_ppm(
@@ -190,34 +244,14 @@ def pack_ppm(
     packs to NULL payload (the decode stage surfaces it as an error
     row, never a task failure). Arrow-batched mapInPandas, same
     plumbing contract as ``pack_wav``."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField(out_payload, T.BinaryType()),
-        ]
-    )
     n_px = width * height * 3
     header = f"P6\n{width} {height}\n255\n".encode("ascii")
 
-    def _pack(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def encode(data: bytes) -> bytes:
+        data = data[:n_px]
+        return header + data + b"\x00" * (n_px - len(data))
 
-        for pdf in batches:
-            payloads = []
-            for text in pdf[text_col]:
-                if text is None:
-                    payloads.append(None)
-                    continue
-                data = text.encode("utf-8")[:n_px]
-                payloads.append(header + data + b"\x00" * (n_px - len(data)))
-            yield pd.DataFrame({id_col: pdf[id_col], out_payload: payloads})
-
-    def _apply(df: DataFrame) -> DataFrame:
-        return _widen(df.select(id_col, text_col), widen).mapInPandas(
-            _pack, out_schema
-        )
-
-    return _apply
+    return _pack_stage(encode, id_col, text_col, out_payload, widen)
 
 
 def pack_png(
@@ -235,59 +269,30 @@ def pack_png(
     an oracle recomputes from the text. The compression level is
     irrelevant to the decoded output (only the decode side is
     certified). NULL text packs to NULL payload."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField(out_payload, T.BinaryType()),
-        ]
-    )
     n_px = side * side
 
-    def _pack(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct as _struct
-        import zlib as _zlib
-
-        import pandas as pd
-
-        def chunk(typ: bytes, body: bytes) -> bytes:
-            c = typ + body
-            return (
-                _struct.pack(">I", len(body))
-                + c
-                + _struct.pack(">I", _zlib.crc32(c) & 0xFFFFFFFF)
-            )
-
-        ihdr = chunk(
-            b"IHDR", _struct.pack(">IIBBBBB", side, side, 8, 0, 0, 0, 0)
-        )
-        iend = chunk(b"IEND", b"")
-
-        for pdf in batches:
-            payloads = []
-            for text in pdf[text_col]:
-                if text is None:
-                    payloads.append(None)
-                    continue
-                data = text.encode("utf-8")[:n_px]
-                data += b"\x00" * (n_px - len(data))
-                raw = b"".join(
-                    b"\x00" + data[r * side : (r + 1) * side]
-                    for r in range(side)
-                )
-                payloads.append(
-                    b"\x89PNG\r\n\x1a\n"
-                    + ihdr
-                    + chunk(b"IDAT", _zlib.compress(raw, 6))
-                    + iend
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], out_payload: payloads})
-
-    def _apply(df: DataFrame) -> DataFrame:
-        return _widen(df.select(id_col, text_col), widen).mapInPandas(
-            _pack, out_schema
+    def chunk(typ: bytes, body: bytes) -> bytes:
+        c = typ + body
+        return (
+            struct.pack(">I", len(body))
+            + c
+            + struct.pack(">I", zlib.crc32(c) & 0xFFFFFFFF)
         )
 
-    return _apply
+    head = b"\x89PNG\r\n\x1a\n" + chunk(
+        b"IHDR", struct.pack(">IIBBBBB", side, side, 8, 0, 0, 0, 0)
+    )
+    iend = chunk(b"IEND", b"")
+
+    def encode(data: bytes) -> bytes:
+        data = data[:n_px]
+        data += b"\x00" * (n_px - len(data))
+        raw = b"".join(
+            b"\x00" + data[r * side : (r + 1) * side] for r in range(side)
+        )
+        return head + chunk(b"IDAT", zlib.compress(raw, 6)) + iend
+
+    return _pack_stage(encode, id_col, text_col, out_payload, widen)
 
 
 def pack_bmp(
@@ -305,59 +310,28 @@ def pack_bmp(
     undoes. This makes the oracle identical in shape to the PPM one
     while certifying the bottom-up + BGR path specifically. NULL text
     packs to NULL payload."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField(out_payload, T.BinaryType()),
-        ]
-    )
     n_bytes = side * side * 3
-
-    def _pack(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct as _struct
-
-        import numpy as np
-        import pandas as pd
-
-        # side*3 stride: for side=16 it is 48, already 4-byte aligned
-        stride = (side * 3 + 3) & ~3
-        pad = stride - side * 3
-        data_off = 14 + 40
-        fsize = data_off + stride * side
-        header = (
-            b"BM"
-            + _struct.pack("<IHHI", fsize, 0, 0, data_off)
-            + _struct.pack(
-                "<IiiHHIIiiII",
-                40, side, side, 1, 24, 0, stride * side, 0, 0, 0, 0,
-            )
+    # side*3 stride: for side=16 it is 48, already 4-byte aligned
+    stride = (side * 3 + 3) & ~3
+    pad = b"\x00" * (stride - side * 3)
+    data_off = 14 + 40
+    header = (
+        b"BM"
+        + struct.pack("<IHHI", data_off + stride * side, 0, 0, data_off)
+        + struct.pack(
+            "<IiiHHIIiiII",
+            40, side, side, 1, 24, 0, stride * side, 0, 0, 0, 0,
         )
+    )
 
-        for pdf in batches:
-            payloads = []
-            for text in pdf[text_col]:
-                if text is None:
-                    payloads.append(None)
-                    continue
-                data = text.encode("utf-8")[:n_bytes]
-                data += b"\x00" * (n_bytes - len(data))
-                rgb = np.frombuffer(data, dtype=np.uint8).reshape(
-                    side, side, 3
-                )
-                bgr_bottom_up = rgb[::-1, :, ::-1]  # row flip + BGR
-                rows = b"".join(
-                    bgr_bottom_up[r].tobytes() + b"\x00" * pad
-                    for r in range(side)
-                )
-                payloads.append(header + rows)
-            yield pd.DataFrame({id_col: pdf[id_col], out_payload: payloads})
+    def encode(data: bytes) -> bytes:
+        data = data[:n_bytes]
+        data += b"\x00" * (n_bytes - len(data))
+        rgb = np.frombuffer(data, dtype=np.uint8).reshape(side, side, 3)
+        bgr_bottom_up = rgb[::-1, :, ::-1]  # row flip + BGR
+        return header + b"".join(row.tobytes() + pad for row in bgr_bottom_up)
 
-    def _apply(df: DataFrame) -> DataFrame:
-        return _widen(df.select(id_col, text_col), widen).mapInPandas(
-            _pack, out_schema
-        )
-
-    return _apply
+    return _pack_stage(encode, id_col, text_col, out_payload, widen)
 
 
 def _flac_crc8(data: bytes) -> int:  # poly 0x07, init 0
@@ -434,31 +408,10 @@ def pack_flac(
     CRC-8/CRC-16, both computed for real even though the decoder
     consumes them unverified) with sample values an oracle recomputes
     from the text. NULL text packs to NULL payload."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField(out_payload, T.BinaryType()),
-        ]
+    return _pack_stage(
+        lambda data: _flac_text_stream(data, n_samples),
+        id_col, text_col, out_payload, widen,
     )
-
-    def _pack(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = [
-                None
-                if text is None
-                else _flac_text_stream(text.encode("utf-8"), n_samples)
-                for text in pdf[text_col]
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], out_payload: payloads})
-
-    def _apply(df: DataFrame) -> DataFrame:
-        return _widen(df.select(id_col, text_col), widen).mapInPandas(
-            _pack, out_schema
-        )
-
-    return _apply
 
 
 def pack_gif_anim(
@@ -479,85 +432,54 @@ def pack_gif_anim(
     every pixel code keeps code width fixed — 2x the bits of real
     compression, irrelevant at 64 pixels/frame and dead simple to
     prove correct). NULL text packs to NULL payload."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField(out_payload, T.BinaryType()),
-        ]
-    )
     npx = frame_px * frame_px
+    # grayscale 4-color palette: index i -> luma 85*i
+    gct = bytes(v for i in range(4) for v in (85 * i, 85 * i, 85 * i))
+    head = b"GIF89a" + struct.pack("<HHBBB", frame_px, frame_px, 0x80 | 1, 0, 0)
 
-    def _pack(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct as _struct
+    def lzw_clear_per_pixel(indices: bytes) -> bytes:
+        # LSB-first bit packing; mcs=2: CLEAR=4, END=5, width 3
+        out = bytearray()
+        acc = nacc = 0
 
-        import pandas as pd
-
-        # grayscale 4-color palette: index i -> luma 85*i
-        gct = bytes(v for i in range(4) for v in (85 * i, 85 * i, 85 * i))
-
-        def lzw_clear_per_pixel(indices: bytes) -> bytes:
-            # LSB-first bit packing; mcs=2: CLEAR=4, END=5, width 3
-            out = bytearray()
-            acc = nacc = 0
-
-            def put(code: int) -> None:
-                nonlocal acc, nacc
-                acc |= code << nacc
-                nacc += 3
-                while nacc >= 8:
-                    out.append(acc & 0xFF)
-                    acc >>= 8
-                    nacc -= 8
-
-            for px in indices:
-                put(4)  # CLEAR: table resets, width stays 3
-                put(px)
-            put(5)  # END
-            if nacc:
+        def put(code: int) -> None:
+            nonlocal acc, nacc
+            acc |= code << nacc
+            nacc += 3
+            while nacc >= 8:
                 out.append(acc & 0xFF)
-            return bytes(out)
+                acc >>= 8
+                nacc -= 8
 
-        for pdf in batches:
-            payloads = []
-            for text in pdf[text_col]:
-                if text is None:
-                    payloads.append(None)
-                    continue
-                data = text.encode("utf-8")
-                n_frames = max(1, min(max_frames, -(-len(data) // npx)))
-                blob = bytearray(b"GIF89a")
-                blob += _struct.pack(
-                    "<HHBBB", frame_px, frame_px, 0x80 | 1, 0, 0
-                )
-                blob += gct
-                for f in range(n_frames):
-                    chunk = data[f * npx : (f + 1) * npx]
-                    idx = bytes(b & 3 for b in chunk) + b"\x00" * (
-                        npx - len(chunk)
-                    )
-                    blob += b"\x21\xf9\x04\x00" + _struct.pack(
-                        "<H", 10 * (f + 1)
-                    ) + b"\x00\x00"
-                    blob += b"\x2c" + _struct.pack(
-                        "<HHHHB", 0, 0, frame_px, frame_px, 0
-                    )
-                    blob.append(2)  # min LZW code size
-                    lzw = lzw_clear_per_pixel(idx)
-                    for i in range(0, len(lzw), 255):
-                        part = lzw[i : i + 255]
-                        blob.append(len(part))
-                        blob += part
-                    blob.append(0)
-                blob += b"\x3b"
-                payloads.append(bytes(blob))
-            yield pd.DataFrame({id_col: pdf[id_col], out_payload: payloads})
+        for px in indices:
+            put(4)  # CLEAR: table resets, width stays 3
+            put(px)
+        put(5)  # END
+        if nacc:
+            out.append(acc & 0xFF)
+        return bytes(out)
 
-    def _apply(df: DataFrame) -> DataFrame:
-        return _widen(df.select(id_col, text_col), widen).mapInPandas(
-            _pack, out_schema
-        )
+    def encode(data: bytes) -> bytes:
+        n_frames = max(1, min(max_frames, -(-len(data) // npx)))
+        blob = bytearray(head + gct)
+        for f in range(n_frames):
+            chunk = data[f * npx : (f + 1) * npx]
+            idx = bytes(b & 3 for b in chunk) + b"\x00" * (npx - len(chunk))
+            blob += b"\x21\xf9\x04\x00" + struct.pack(
+                "<H", 10 * (f + 1)
+            ) + b"\x00\x00"
+            blob += b"\x2c" + struct.pack("<HHHHB", 0, 0, frame_px, frame_px, 0)
+            blob.append(2)  # min LZW code size
+            lzw = lzw_clear_per_pixel(idx)
+            for i in range(0, len(lzw), 255):
+                part = lzw[i : i + 255]
+                blob.append(len(part))
+                blob += part
+            blob.append(0)
+        blob += b"\x3b"
+        return bytes(blob)
 
-    return _apply
+    return _pack_stage(encode, id_col, text_col, out_payload, widen)
 
 
 def _dc_only_jpeg(tiles: list[int]) -> bytes:
@@ -657,62 +579,36 @@ def pack_avi_mjpeg(
     skeleton is spec-shaped (avih + vids strl with MJPG handler +
     movi '00dc' chunks) at scale/rate = 1/10 -> 10 cs per frame.
     NULL text packs to NULL payload."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField(out_payload, T.BinaryType()),
-        ]
+    def chunk(fcc: bytes, body: bytes) -> bytes:
+        pad = b"\x00" if len(body) & 1 else b""
+        return fcc + len(body).to_bytes(4, "little") + body + pad
+
+    def lst(kind: bytes, body: bytes) -> bytes:
+        return chunk(b"LIST", kind + body)
+
+    strh = (
+        b"vids" + b"MJPG" + bytes(12)
+        + (1).to_bytes(4, "little") + (10).to_bytes(4, "little")
+        + bytes(28)
     )
+    strf = (
+        (40).to_bytes(4, "little") + (16).to_bytes(4, "little")
+        + (16).to_bytes(4, "little") + (1).to_bytes(2, "little")
+        + (24).to_bytes(2, "little") + b"MJPG" + bytes(20)
+    )
+    strl = lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf))
 
-    def _pack(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct as _struct
-
-        import pandas as pd
-
-        def chunk(fcc: bytes, body: bytes) -> bytes:
-            pad = b"\x00" if len(body) & 1 else b""
-            return fcc + len(body).to_bytes(4, "little") + body + pad
-
-        def lst(kind: bytes, body: bytes) -> bytes:
-            return chunk(b"LIST", kind + body)
-
-        strh = (
-            b"vids" + b"MJPG" + bytes(12)
-            + (1).to_bytes(4, "little") + (10).to_bytes(4, "little")
-            + bytes(28)
+    def encode(data: bytes) -> bytes:
+        jpegs = _mjpeg_text_frames(data, max_frames)
+        avih = struct.pack(
+            "<14I", 100_000, 0, 0, 0, len(jpegs), 0, 1, 0, 16, 16, 0, 0, 0, 0,
         )
-        strf = (
-            (40).to_bytes(4, "little") + (16).to_bytes(4, "little")
-            + (16).to_bytes(4, "little") + (1).to_bytes(2, "little")
-            + (24).to_bytes(2, "little") + b"MJPG" + bytes(20)
-        )
-        strl = lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf))
+        hdrl = lst(b"hdrl", chunk(b"avih", avih) + strl)
+        movi_body = b"".join(chunk(b"00dc", j) for j in jpegs)
+        payload = b"AVI " + hdrl + lst(b"movi", movi_body)
+        return b"RIFF" + len(payload).to_bytes(4, "little") + payload
 
-        for pdf in batches:
-            payloads = []
-            for text in pdf[text_col]:
-                if text is None:
-                    payloads.append(None)
-                    continue
-                jpegs = _mjpeg_text_frames(text.encode("utf-8"), max_frames)
-                avih = _struct.pack(
-                    "<14I", 100_000, 0, 0, 0, len(jpegs), 0, 1, 0,
-                    16, 16, 0, 0, 0, 0,
-                )
-                hdrl = lst(b"hdrl", chunk(b"avih", avih) + strl)
-                movi_body = b"".join(chunk(b"00dc", j) for j in jpegs)
-                payload = b"AVI " + hdrl + lst(b"movi", movi_body)
-                payloads.append(
-                    b"RIFF" + len(payload).to_bytes(4, "little") + payload
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], out_payload: payloads})
-
-    def _apply(df: DataFrame) -> DataFrame:
-        return _widen(df.select(id_col, text_col), widen).mapInPandas(
-            _pack, out_schema
-        )
-
-    return _apply
+    return _pack_stage(encode, id_col, text_col, out_payload, widen)
 
 
 def pack_mp4_mjpeg(
@@ -733,89 +629,58 @@ def pack_mp4_mjpeg(
     ``codecs.py::decode_mp4_mjpeg_frames`` reproduces the tile values
     EXACTLY, so per-frame means replay from the text's bytes in the
     oracle. NULL text packs to NULL payload."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField(out_payload, T.BinaryType()),
-        ]
+    def box(typ: bytes, body: bytes) -> bytes:
+        return (8 + len(body)).to_bytes(4, "big") + typ + body
+
+    def full(typ: bytes, body: bytes, flags: int = 0) -> bytes:
+        return box(typ, bytes([0]) + flags.to_bytes(3, "big") + body)
+
+    unity = struct.pack(
+        ">9i", 0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000
     )
+    ftyp = box(b"ftyp", b"isom" + (512).to_bytes(4, "big") + b"isomiso2mp41")
+    jpeg_entry_tail = (
+        bytes(6) + (1).to_bytes(2, "big")          # data_ref_index
+        + bytes(16)                                # pre_defined/reserved
+        + (16).to_bytes(2, "big") + (16).to_bytes(2, "big")  # w x h
+        + (0x00480000).to_bytes(4, "big") * 2      # 72 dpi
+        + bytes(4) + (1).to_bytes(2, "big")        # frame_count
+        + bytes(32)                                # compressorname
+        + (24).to_bytes(2, "big") + (0xFFFF).to_bytes(2, "big")
+    )
+    stsd = full(b"stsd", (1).to_bytes(4, "big") + box(b"jpeg", jpeg_entry_tail))
+    dref = full(b"dref", (1).to_bytes(4, "big") + full(b"url ", b"", flags=1))
+    hdlr = full(b"hdlr", bytes(4) + b"vide" + bytes(12) + b"\x00")
+    vmhd = full(b"vmhd", bytes(8), flags=1)
+    first_off = len(ftyp) + 8  # mdat body start in the file
 
-    def _pack(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct as _struct
+    def encode(data: bytes) -> bytes:
+        jpegs = _mjpeg_text_frames(data, max_frames)
+        n = len(jpegs)
+        dur = 10 * n  # timescale 100, 10 ticks per frame
+        mvhd = full(b"mvhd", struct.pack(">IIII", 0, 0, 100, dur)
+                    + (0x00010000).to_bytes(4, "big")
+                    + (0x0100).to_bytes(2, "big") + bytes(10)
+                    + unity + bytes(24) + (2).to_bytes(4, "big"))
+        tkhd = full(b"tkhd", struct.pack(">IIII", 0, 0, 1, 0)
+                    + dur.to_bytes(4, "big") + bytes(16)
+                    + unity + (16 << 16).to_bytes(4, "big")
+                    + (16 << 16).to_bytes(4, "big"), flags=3)
+        mdhd = full(b"mdhd", struct.pack(">IIII", 0, 0, 100, dur)
+                    + struct.pack(">HH", 0x55C4, 0))
+        stts = full(b"stts", (1).to_bytes(4, "big") + struct.pack(">II", n, 10))
+        stsc = full(b"stsc", (1).to_bytes(4, "big")
+                    + struct.pack(">III", 1, n, 1))
+        stsz = full(b"stsz", (0).to_bytes(4, "big") + n.to_bytes(4, "big")
+                    + b"".join(len(j).to_bytes(4, "big") for j in jpegs))
+        stco = full(b"stco", (1).to_bytes(4, "big")
+                    + first_off.to_bytes(4, "big"))
+        stbl = box(b"stbl", stsd + stts + stsc + stsz + stco)
+        mdia = box(b"mdia", mdhd + hdlr + box(b"minf", vmhd + dref + stbl))
+        moov = box(b"moov", mvhd + box(b"trak", tkhd + mdia))
+        return ftyp + box(b"mdat", b"".join(jpegs)) + moov
 
-        import pandas as pd
-
-        def box(typ: bytes, body: bytes) -> bytes:
-            return (8 + len(body)).to_bytes(4, "big") + typ + body
-
-        def full(typ: bytes, body: bytes, flags: int = 0) -> bytes:
-            return box(typ, bytes([0]) + flags.to_bytes(3, "big") + body)
-
-        unity = _struct.pack(
-            ">9i", 0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000
-        )
-        ftyp = box(b"ftyp", b"isom" + (512).to_bytes(4, "big")
-                   + b"isomiso2mp41")
-        jpeg_entry_tail = (
-            bytes(6) + (1).to_bytes(2, "big")          # data_ref_index
-            + bytes(16)                                # pre_defined/reserved
-            + (16).to_bytes(2, "big") + (16).to_bytes(2, "big")  # w x h
-            + (0x00480000).to_bytes(4, "big") * 2      # 72 dpi
-            + bytes(4) + (1).to_bytes(2, "big")        # frame_count
-            + bytes(32)                                # compressorname
-            + (24).to_bytes(2, "big") + (0xFFFF).to_bytes(2, "big")
-        )
-        dref = full(b"dref", (1).to_bytes(4, "big")
-                    + full(b"url ", b"", flags=1))
-        hdlr = full(b"hdlr", bytes(4) + b"vide" + bytes(12) + b"\x00")
-        vmhd = full(b"vmhd", bytes(8), flags=1)
-
-        for pdf in batches:
-            payloads = []
-            for text in pdf[text_col]:
-                if text is None:
-                    payloads.append(None)
-                    continue
-                jpegs = _mjpeg_text_frames(text.encode("utf-8"), max_frames)
-                n = len(jpegs)
-                dur = 10 * n  # timescale 100, 10 ticks per frame
-                mdat = box(b"mdat", b"".join(jpegs))
-                first_off = len(ftyp) + 8  # mdat body start in the file
-                mvhd = full(b"mvhd", _struct.pack(">IIII", 0, 0, 100, dur)
-                            + (0x00010000).to_bytes(4, "big")
-                            + (0x0100).to_bytes(2, "big") + bytes(10)
-                            + unity + bytes(24) + (2).to_bytes(4, "big"))
-                tkhd = full(b"tkhd", _struct.pack(">IIII", 0, 0, 1, 0)
-                            + dur.to_bytes(4, "big") + bytes(16)
-                            + unity + (16 << 16).to_bytes(4, "big")
-                            + (16 << 16).to_bytes(4, "big"), flags=3)
-                mdhd = full(b"mdhd", _struct.pack(">IIII", 0, 0, 100, dur)
-                            + _struct.pack(">HH", 0x55C4, 0))
-                stsd = full(b"stsd", (1).to_bytes(4, "big")
-                            + box(b"jpeg", jpeg_entry_tail))
-                stts = full(b"stts", (1).to_bytes(4, "big")
-                            + _struct.pack(">II", n, 10))
-                stsc = full(b"stsc", (1).to_bytes(4, "big")
-                            + _struct.pack(">III", 1, n, 1))
-                stsz = full(b"stsz", (0).to_bytes(4, "big")
-                            + n.to_bytes(4, "big")
-                            + b"".join(len(j).to_bytes(4, "big")
-                                       for j in jpegs))
-                stco = full(b"stco", (1).to_bytes(4, "big")
-                            + first_off.to_bytes(4, "big"))
-                stbl = box(b"stbl", stsd + stts + stsc + stsz + stco)
-                minf = box(b"minf", vmhd + dref + stbl)
-                mdia = box(b"mdia", mdhd + hdlr + minf)
-                moov = box(b"moov", mvhd + box(b"trak", tkhd + mdia))
-                payloads.append(ftyp + mdat + moov)
-            yield pd.DataFrame({id_col: pdf[id_col], out_payload: payloads})
-
-    def _apply(df: DataFrame) -> DataFrame:
-        return _widen(df.select(id_col, text_col), widen).mapInPandas(
-            _pack, out_schema
-        )
-
-    return _apply
+    return _pack_stage(encode, id_col, text_col, out_payload, widen)
 
 
 def _ogg_crc(page: bytes) -> int:
@@ -908,41 +773,16 @@ def pack_ogg_flac(
     and feeds the certified native FLAC frame decoder, so the oracle
     replays the decoded sample stats from text bytes exactly as for
     the bare container. NULL text packs to NULL payload."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField(out_payload, T.BinaryType()),
-        ]
-    )
+    def encode(data: bytes) -> bytes:
+        native = _flac_text_stream(data, n_samples)
+        # native[:42] = fLaC + STREAMINFO block (4 + 4 + 34)
+        bos = b"\x7fFLAC" + bytes([1, 0]) + (0).to_bytes(2, "big") + native[:42]
+        # the frame packet spans continuation pages above 255*255-1
+        # bytes (n_samples ~> 32.5k) — RFC framing, not a crash
+        frames, _ = _ogg_packet_pages(9, 1, n_samples, native[42:], htype_last=4)
+        return _ogg_page(9, 0, 0, bos, htype=2) + frames
 
-    def _pack(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for text in pdf[text_col]:
-                if text is None:
-                    payloads.append(None)
-                    continue
-                native = _flac_text_stream(text.encode("utf-8"), n_samples)
-                # native[:42] = fLaC + STREAMINFO block (4 + 4 + 34)
-                bos = (b"\x7fFLAC" + bytes([1, 0])
-                       + (0).to_bytes(2, "big") + native[:42])
-                # the frame packet spans continuation pages above
-                # 255*255-1 bytes (n_samples ~> 32.5k) — RFC framing,
-                # not a crash (round-10 second review pass)
-                frames, _ = _ogg_packet_pages(
-                    9, 1, n_samples, native[42:], htype_last=4
-                )
-                payloads.append(_ogg_page(9, 0, 0, bos, htype=2) + frames)
-            yield pd.DataFrame({id_col: pdf[id_col], out_payload: payloads})
-
-    def _apply(df: DataFrame) -> DataFrame:
-        return _widen(df.select(id_col, text_col), widen).mapInPandas(
-            _pack, out_schema
-        )
-
-    return _apply
+    return _pack_stage(encode, id_col, text_col, out_payload, widen)
 
 
 def pack_ogg_opus(
@@ -964,47 +804,21 @@ def pack_ogg_opus(
     exactly — both replayable from the text's byte length in the
     oracle. Entropy decode of Opus itself stays environment-gated; the
     CONTAINER is fully real. NULL text packs to NULL payload."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField(out_payload, T.BinaryType()),
-        ]
-    )
+    head = (b"OpusHead" + bytes([1, 1]) + struct.pack("<H", 0)
+            + struct.pack("<I", 48000) + struct.pack("<h", 0) + b"\x00")
+    tags = b"OpusTags" + struct.pack("<I", 4) + b"pack" + struct.pack("<I", 0)
+    pages = _ogg_page(7, 0, 0, head, htype=2) + _ogg_page(7, 1, 0, tags)
 
-    def _pack(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct as _struct
+    def encode(data: bytes) -> bytes:
+        n = max(1, min(max_pages, -(-len(data) // 64)))
+        out = pages
+        for i in range(n):
+            chunk = data[i * 64 : (i + 1) * 64] or b"\x00"
+            out += _ogg_page(7, 2 + i, 480 * (i + 1), chunk,
+                             htype=4 if i == n - 1 else 0)
+        return out
 
-        import pandas as pd
-
-        head = (b"OpusHead" + bytes([1, 1]) + _struct.pack("<H", 0)
-                + _struct.pack("<I", 48000) + _struct.pack("<h", 0)
-                + b"\x00")
-        tags = (b"OpusTags" + _struct.pack("<I", 4) + b"pack"
-                + _struct.pack("<I", 0))
-
-        for pdf in batches:
-            payloads = []
-            for text in pdf[text_col]:
-                if text is None:
-                    payloads.append(None)
-                    continue
-                data = text.encode("utf-8")
-                n = max(1, min(max_pages, -(-len(data) // 64)))
-                out = (_ogg_page(7, 0, 0, head, htype=2)
-                       + _ogg_page(7, 1, 0, tags))
-                for i in range(n):
-                    chunk = data[i * 64 : (i + 1) * 64] or b"\x00"
-                    out += _ogg_page(7, 2 + i, 480 * (i + 1), chunk,
-                                     htype=4 if i == n - 1 else 0)
-                payloads.append(out)
-            yield pd.DataFrame({id_col: pdf[id_col], out_payload: payloads})
-
-    def _apply(df: DataFrame) -> DataFrame:
-        return _widen(df.select(id_col, text_col), widen).mapInPandas(
-            _pack, out_schema
-        )
-
-    return _apply
+    return _pack_stage(encode, id_col, text_col, out_payload, widen)
 
 
 def decode_video_frames(
@@ -1051,48 +865,27 @@ def decode_video_frames(
 
         from rentals_data_pipeline_spark.operators.codecs import (
             _MP4_MAGIC,
-            CodecError,
             decode_avi_mjpeg_frames,
             decode_gif_frames,
             decode_mp4_mjpeg_frames,
         )
 
+        def frames_of(raw: bytes):
+            if raw[:4] == b"RIFF" and raw[8:12] == b"AVI ":
+                return decode_avi_mjpeg_frames(raw, max_frames=max_frames)
+            if len(raw) >= 12 and raw[4:8] in _MP4_MAGIC:
+                return decode_mp4_mjpeg_frames(raw, max_frames=max_frames)
+            # the GIF path also owns the foreign-magic error
+            return decode_gif_frames(raw, max_frames=max_frames)
+
         for pdf in batches:
             rows: list[tuple] = []
             for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    rows.append(
-                        (doc_id, None, None, None, None, None,
-                         None, None, None, None, "null payload")
-                    )
+                decoded, err = _guarded("decode", frames_of, payload)
+                if err is not None:
+                    rows.append((doc_id, *[None] * 9, err))
                     continue
-                try:
-                    raw = bytes(payload)
-                    if raw[:4] == b"RIFF" and raw[8:12] == b"AVI ":
-                        frames, delays, trunc = decode_avi_mjpeg_frames(
-                            raw, max_frames=max_frames
-                        )
-                    elif len(raw) >= 12 and raw[4:8] in _MP4_MAGIC:
-                        frames, delays, trunc = decode_mp4_mjpeg_frames(
-                            raw, max_frames=max_frames
-                        )
-                    else:  # GIF path also owns the foreign-magic error
-                        frames, delays, trunc = decode_gif_frames(
-                            raw, max_frames=max_frames
-                        )
-                except CodecError as e:
-                    rows.append(
-                        (doc_id, None, None, None, None, None,
-                         None, None, None, None, str(e))
-                    )
-                    continue
-                except Exception as e:  # hostile blob != task failure
-                    rows.append(
-                        (doc_id, None, None, None, None, None, None, None,
-                         None, None,
-                         f"decode failure: {type(e).__name__}: {str(e)[:120]}")
-                    )
-                    continue
+                frames, delays, trunc = decoded
                 n = len(frames)
                 for i, (fr, dl) in enumerate(zip(frames, delays)):
                     h, w = fr.shape[:2]
@@ -1153,10 +946,7 @@ def decode_media(
     def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
-        from rentals_data_pipeline_spark.operators.codecs import (
-            CodecError,
-            sniff_and_decode,
-        )
+        from rentals_data_pipeline_spark.operators.codecs import sniff_and_decode
 
         for pdf in batches:
             cols: dict[str, list] = {
@@ -1166,29 +956,15 @@ def decode_media(
                 "decoded": [],
                 "decode_error": [],
             }
-
-            def emit(nch=None, sr=None, decoded=None, err=None):
+            for payload in pdf[payload_col]:
+                out, err = _guarded("decode", sniff_and_decode, payload)
+                nch, sr, channels = out or (None, None, None)
                 cols["n_channels"].append(nch)
                 cols["sample_rate"].append(sr)
-                cols["decoded"].append(decoded)
+                cols["decoded"].append(
+                    None if out is None else [c.tolist() for c in channels]
+                )
                 cols["decode_error"].append(err)
-
-            for payload in pdf[payload_col]:
-                if payload is None:
-                    emit(err="null payload")
-                    continue
-                try:
-                    nch, sr, channels = sniff_and_decode(bytes(payload))
-                except CodecError as e:  # corrupt blob != task failure
-                    emit(err=str(e))
-                    continue
-                except Exception as e:  # decoder BUG != task failure either:
-                    # at 100 TB one hostile blob tripping an unforeseen
-                    # IndexError/ValueError must not kill the stage —
-                    # surface it as a distinguishable error row instead
-                    emit(err=f"decode failure: {type(e).__name__}: {str(e)[:120]}")
-                    continue
-                emit(nch=nch, sr=sr, decoded=[c.tolist() for c in channels])
             yield pd.DataFrame(cols)
 
     return df.select(id_col, payload_col).mapInPandas(_decode, out_schema)
@@ -1238,10 +1014,7 @@ def probe_media(
     def _probe(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
-        from rentals_data_pipeline_spark.operators.codecs import (
-            CodecError,
-            probe_container,
-        )
+        from rentals_data_pipeline_spark.operators.codecs import probe_container
 
         for pdf in batches:
             cols: dict[str, list] = {id_col: list(pdf[id_col])}
@@ -1250,23 +1023,11 @@ def probe_media(
             for f in fields:
                 cols[f] = []
             cols["probe_error"] = []
-
-            def emit(meta: "dict | None", err: "str | None" = None) -> None:
+            for payload in pdf[payload_col]:
+                meta, err = _guarded("probe", probe_container, payload)
                 for f in fields:
                     cols[f].append(meta.get(f) if meta else None)
                 cols["probe_error"].append(err)
-
-            for payload in pdf[payload_col]:
-                if payload is None:
-                    emit(None, "null payload")
-                    continue
-                try:
-                    emit(probe_container(bytes(payload)))
-                except CodecError as e:
-                    emit(None, str(e))
-                except Exception as e:  # prober BUG != task failure
-                    emit(None, f"probe failure: {type(e).__name__}: "
-                               f"{str(e)[:120]}")
             yield pd.DataFrame(cols)
 
     return df.select(id_col, *passthrough, payload_col).mapInPandas(
@@ -1284,39 +1045,16 @@ def byte_histogram_features(
     (numpy bincount — vectorized, no per-row Python loops). This is the
     exact plumbing shape of a real decode/embed UDF: binary in,
     fixed-dim double vector out, schema declared up front."""
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("features", T.ArrayType(T.DoubleType())),
-        ]
-    )
     width = 256 // n_bins
 
-    def _extract(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def hist(payload: bytes) -> list[float]:
+        arr = np.frombuffer(payload, dtype=np.uint8)
+        h = np.bincount(arr // width, minlength=n_bins)[:n_bins]
+        total = h.sum()
+        return (h / total).astype(float).tolist() if total else [0.0] * n_bins
 
-        for pdf in batches:
-            feats = []
-            for payload in pdf[payload_col]:
-                if payload is None:  # null blob -> null features, not a crash
-                    feats.append(None)
-                    continue
-                arr = np.frombuffer(payload, dtype=np.uint8)
-                hist = np.bincount(arr // width, minlength=n_bins)[:n_bins]
-                total = hist.sum()
-                feats.append(
-                    (hist / total).astype(float).tolist()
-                    if total
-                    else [0.0] * n_bins
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "features": feats})
-
-    def _apply(df: DataFrame) -> DataFrame:
-        return df.select(id_col, payload_col).mapInPandas(_extract, out_schema)
-
-    return _apply
+    field = T.StructField("features", _DOUBLES)
+    return lambda df: _row_map(df, id_col, payload_col, field, hist)
 
 
 def frame_sample(
@@ -1369,39 +1107,17 @@ def resize_grid(
     if src_size % dst_size:
         raise ValueError("src_size must be a multiple of dst_size")
     block = src_size // dst_size
+    n = src_size * src_size
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("resized", T.ArrayType(T.DoubleType())),
-        ]
-    )
+    def resize(payload: bytes) -> list[float]:
+        arr = np.frombuffer(payload[:n], dtype=np.uint8)
+        if len(arr) < n:
+            arr = np.pad(arr, (0, n - len(arr)))
+        grid = arr.reshape(dst_size, block, dst_size, block).astype(np.float64)
+        return grid.mean(axis=(1, 3)).ravel().tolist()
 
-    def _resize(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        n = src_size * src_size
-        for pdf in batches:
-            out = []
-            for payload in pdf[payload_col]:
-                if payload is None:  # null blob -> null grid, not a crash
-                    out.append(None)
-                    continue
-                arr = np.frombuffer(payload[:n], dtype=np.uint8)
-                if len(arr) < n:
-                    arr = np.pad(arr, (0, n - len(arr)))
-                grid = arr.reshape(src_size, src_size).astype(np.float64)
-                small = grid.reshape(
-                    dst_size, block, dst_size, block
-                ).mean(axis=(1, 3))
-                out.append(small.ravel().tolist())
-            yield pd.DataFrame({id_col: pdf[id_col], "resized": out})
-
-    def _apply(df: DataFrame) -> DataFrame:
-        return df.select(id_col, payload_col).mapInPandas(_resize, out_schema)
-
-    return _apply
+    field = T.StructField("resized", _DOUBLES)
+    return lambda df: _row_map(df, id_col, payload_col, field, resize)
 
 
 def audio_energy(
@@ -1425,36 +1141,13 @@ def audio_energy(
     if window & (window - 1):
         raise ValueError("window must be a power of two (exact division)")
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("energy", T.ArrayType(T.DoubleType())),
-        ]
-    )
+    def energy(payload: bytes) -> list[float]:
+        arr = np.frombuffer(payload, dtype=np.uint8).astype(np.float64)
+        w = arr[: len(arr) // window * window].reshape(-1, window)
+        return np.sqrt((w * w).sum(axis=1) / window).tolist()
 
-    def _energy(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for payload in pdf[payload_col]:
-                if payload is None:
-                    out.append([])
-                    continue
-                arr = np.frombuffer(payload, dtype=np.uint8).astype(np.float64)
-                n_full = len(arr) // window
-                if n_full == 0:
-                    out.append([])
-                    continue
-                w = arr[: n_full * window].reshape(n_full, window)
-                out.append(np.sqrt((w * w).sum(axis=1) / window).tolist())
-            yield pd.DataFrame({id_col: pdf[id_col], "energy": out})
-
-    def _apply(df: DataFrame) -> DataFrame:
-        return df.select(id_col, payload_col).mapInPandas(_energy, out_schema)
-
-    return _apply
+    field = T.StructField("energy", _DOUBLES)
+    return lambda df: _row_map(df, id_col, payload_col, field, energy, null_out=[])
 
 
 def audio_dominant_lag(

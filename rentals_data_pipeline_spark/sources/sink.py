@@ -1,18 +1,19 @@
 """Partitioned parquet sink.
 
 Capability parity with the reference's ``write_processed`` (reference:
-jobs/io_utils.py:88-107) — derived partition column, overwrite, snappy,
-hive-style partition dirs for downstream partition pruning — with the
-one deliberate divergence SURVEY §4.3 mandates: **no ``coalesce(1)``**.
-A single output task serializes the write; at 100 TB it is the job. We
-instead repartition by the partition columns so each partition dir is
-written by tasks that own all its rows (no small-file explosion), and
-let AQE size the shuffle.
+jobs/io_utils.py:88-107) — overwrite, snappy, hive-style partition
+dirs for downstream partition pruning (its derived ``year`` column is
+derived by ``run_etl``) — with the one deliberate divergence SURVEY
+§4.3 mandates: **no ``coalesce(1)``**. A single output task
+serializes the write; at 100 TB it is the job. We instead repartition
+by the partition columns so each partition dir is written by tasks
+that own all its rows (no small-file explosion), and let AQE size the
+shuffle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
@@ -21,7 +22,6 @@ def write_partitioned_parquet(
     df: DataFrame,
     path: str,
     partition_by: list[str],
-    derived: dict[str, Column] | None = None,
     mode: str = "overwrite",
     compression: str = "snappy",
     target_files_per_partition: int | None = None,
@@ -32,18 +32,15 @@ def write_partitioned_parquet(
     """Write hive-partitioned snappy parquet, scale-safe; return the
     schema the written table reads back with.
 
-    ``derived`` adds computed partition columns first (the reference
-    derives ``year`` from ``month`` — jobs/io_utils.py:101).
-
     An input already hash-partitioned on exactly ``partition_by`` is
     written without a second shuffle (``target_files_per_partition``
     unset): Spark drops the repartition
     below, and a sort of the input that starts with ``partition_by``
     also serves the writer's ordering. A caller that shuffles upstream
     anyway (a window over a superset of the partition columns)
-    clusters there on ``partition_by`` and derives the partition
-    columns itself, before that shuffle; ``derived`` adds new columns
-    after it, so the sink would shuffle again.
+    derives the partition columns itself and clusters there on
+    ``partition_by`` (the reference's derived ``year`` from ``month``,
+    jobs/io_utils.py:101, is derived that way in ``run_etl``).
 
     File-size control — the reference's ``coalesce(1)`` intent
     (jobs/io_utils.py:102: "exactly one tidy file per dir") without its
@@ -74,13 +71,11 @@ def write_partitioned_parquet(
     range-filtered read.
 
     The returned ``StructType`` lists the data columns, then the
-    partition columns in ``partition_by`` order (derived ones included),
-    all nullable: the layout a Parquet reader produces. Passing it to
+    partition columns in ``partition_by`` order, all nullable: the
+    layout a Parquet reader produces. Passing it to
     ``spark.read.schema`` reads the table back without a
     schema-inference job.
     """
-    for name, expr in (derived or {}).items():
-        df = df.withColumn(name, expr)
     schema = df.schema
     data = [f for f in schema.fields if f.name not in partition_by]
     written = StructType(

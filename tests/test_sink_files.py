@@ -72,10 +72,9 @@ def test_derived_partition_column_still_applies(spark, tmp_path):
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     out = tmp_path / "derived"
     write_partitioned_parquet(
-        orders,
+        orders.withColumn("o_year", F.year("o_orderdate")),
         str(out),
         ["o_year"],
-        derived={"o_year": F.year("o_orderdate")},
         target_files_per_partition=2,
     )
     counts = _files_per_dir(out)
@@ -295,15 +294,14 @@ def test_compaction_rewrites_only_fragmented_partitions(spark, tmp_path):
 
 def test_returned_schema_is_the_readback_schema(spark, tmp_path):
     """The sink returns the schema inference would find on readback
-    (data columns, then partition columns, derived ones included), so a
-    reader can skip the inference job."""
+    (data columns, then partition columns, a derived one included), so
+    a reader can skip the inference job."""
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     out = str(tmp_path / "schema")
     written = write_partitioned_parquet(
-        orders,
+        orders.withColumn("o_year", F.year("o_orderdate")),
         out,
         ["o_orderstatus", "o_year"],
-        derived={"o_year": F.year("o_orderdate")},
     )
     assert written == spark.read.parquet(out).schema
     assert written.names[-2:] == ["o_orderstatus", "o_year"]
