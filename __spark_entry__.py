@@ -45,21 +45,22 @@ def entry(spark: SparkSession) -> DataFrame:
 # passed via --changed) + (oldest driver certification first, ties by
 # name); group 2 is the rest of the oracle-paired catalog; group 3 is
 # rows-only by design (no_oracle rows>0; golden tests pin semantics).
-# Current rotation: group 0 leads with the five TPC-H queries whose
-# plans changed: Q2 and Q17 apply their correlated MIN/AVG as a
-# partitioned window, and Q2/Q11/Q16/Q20 derive partsupp from the part
-# frame each passes to ``_partsupp``.
+# Current rotation: group 0 leads with the 18 oracle-paired multimodal
+# queries, whose Python stages now share one Arrow row-map
+# (``operators/multimodal.py::_row_map``) and one bad-blob rule.
 _CHECK_PRIORITY: tuple[str, ...] = (
-    # generated by: python tools/cert_rotation.py --changed tpch_q2_min_cost_supplier tpch_q11_important_stock tpch_q16_supplier_part_counts tpch_q17_small_quantity tpch_q20_potential_promotion  # history through r14
+    # generated by: python tools/cert_rotation.py --changed multimodal_audio_dominant_lag multimodal_decoded_avi_stats multimodal_decoded_bmp_stats multimodal_decoded_flac_stats multimodal_decoded_gif_stats multimodal_decoded_mp4_stats multimodal_decoded_ogg_stats multimodal_decoded_png_stats multimodal_decoded_ppm_stats multimodal_decoded_wav_stats multimodal_shot_boundaries pipeline_media_curation multimodal_audio_energy multimodal_byte_histogram multimodal_frame_sample multimodal_metadata multimodal_resize_grid multimodal_container_probe  # history through r14
     # -- group 0: this round's 50 driver checks (changed-this-round
     # first, then oldest driver certification first) ---------------
-    "tpch_q2_min_cost_supplier", "tpch_q11_important_stock",
-    "tpch_q16_supplier_part_counts", "tpch_q17_small_quantity",
-    "tpch_q20_potential_promotion", "multimodal_audio_dominant_lag",
-    "multimodal_decoded_avi_stats", "multimodal_decoded_bmp_stats",
-    "multimodal_decoded_flac_stats", "multimodal_decoded_gif_stats",
-    "multimodal_decoded_mp4_stats", "multimodal_decoded_ogg_stats",
-    "multimodal_decoded_png_stats", "multimodal_decoded_ppm_stats",
+    "multimodal_audio_dominant_lag", "multimodal_decoded_avi_stats",
+    "multimodal_decoded_bmp_stats", "multimodal_decoded_flac_stats",
+    "multimodal_decoded_gif_stats", "multimodal_decoded_mp4_stats",
+    "multimodal_decoded_ogg_stats", "multimodal_decoded_png_stats",
+    "multimodal_decoded_ppm_stats", "multimodal_decoded_wav_stats",
+    "multimodal_shot_boundaries", "pipeline_media_curation",
+    "multimodal_audio_energy", "multimodal_byte_histogram",
+    "multimodal_frame_sample", "multimodal_metadata",
+    "multimodal_resize_grid", "multimodal_container_probe",
     "pipeline_embedding_curation", "pipeline_embedding_curation_srp",
     "quality_table_checksum_orders", "sample_weighted_documents",
     "sim_cosine_topk", "sim_embedding_near_dup_pairs", "sim_knn_label_vote",
@@ -75,16 +76,15 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "window_rank_in_group", "window_rolling_avg", "agg_boolean_aggregates",
     "agg_collect_event_types", "agg_mode_orders_priority",
     "analytics_activity_streaks", "analytics_attribution_last_touch",
-    "analytics_attribution_u_shaped", "analytics_cohort_ltv",
-    "analytics_funnel_conversion_window",
-    "analytics_interval_union_coverage",
 
     # -- group 2: oracle-paired, recently driver-certified ----------
-    "analytics_pareto_orders", "analytics_rank_movers",
-    "analytics_rfm_segmentation", "analytics_user_lifecycle",
-    "dedup_contamination_report", "dedup_semdedup_embeddings",
-    "dedup_semdedup_incremental", "dedup_shared_span_pairs",
-    "flagship_events_daily", "multimodal_decoded_wav_stats",
+    "analytics_attribution_u_shaped", "analytics_cohort_ltv",
+    "analytics_funnel_conversion_window",
+    "analytics_interval_union_coverage", "analytics_pareto_orders",
+    "analytics_rank_movers", "analytics_rfm_segmentation",
+    "analytics_user_lifecycle", "dedup_contamination_report",
+    "dedup_semdedup_embeddings", "dedup_semdedup_incremental",
+    "dedup_shared_span_pairs", "flagship_events_daily",
     "pipeline_curation_funnel_by_source", "pipeline_semantic_curation",
     "sample_dsir_importance", "stats_chi_square_events",
     "stats_equal_frequency_binning", "stats_group_confidence_intervals",
@@ -94,24 +94,24 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "text_gopher_quality_rules", "text_repetition_filters",
     "text_unigram_logprob", "tpch_q13_customer_distribution",
     "tpch_q14_promo_effect", "tpch_q15_top_supplier",
-    "tpch_q18_large_volume_customer", "tpch_q19_discounted_revenue",
-    "tpch_q21_suppliers_kept_waiting", "tpch_q22_global_sales_opportunity",
-    "tpch_q4_priority_checking", "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping", "tpch_q8_market_share",
-    "tpch_q9_product_type_profit", "window_range_frame_events",
-    "agg_case_bucketing", "agg_distinct_counts",
-    "agg_having_frequent_customers", "agg_percentiles_lineitem",
-    "dedup_cross_source_overlap", "dedup_decontaminate_bloom",
-    "dedup_soft_dedup_weights", "join_asof_tolerance_error",
-    "join_point_in_time_scd2", "join_temporal_validity_intersection",
-    "multimodal_shot_boundaries", "pipeline_media_curation",
-    "pipeline_training_data_prep", "quality_benford_first_digit",
-    "quality_cross_field_violations", "quality_k_anonymity_customers",
-    "quality_mad_anomaly_events", "reshape_denormalize_star",
-    "reshape_union_schema_evolution", "sample_balanced_labels",
-    "sample_corpus_mixture", "sample_stratified_split_embeddings",
-    "scalar_array_suite", "scalar_bitwise_suite", "scalar_nested_suite",
-    "scalar_try_suite", "sim_centroid_drift", "sim_centroid_outlier_filter",
+    "tpch_q17_small_quantity", "tpch_q18_large_volume_customer",
+    "tpch_q19_discounted_revenue", "tpch_q21_suppliers_kept_waiting",
+    "tpch_q22_global_sales_opportunity", "tpch_q4_priority_checking",
+    "tpch_q6_forecast_revenue", "tpch_q7_volume_shipping",
+    "tpch_q8_market_share", "tpch_q9_product_type_profit",
+    "window_range_frame_events", "agg_case_bucketing",
+    "agg_distinct_counts", "agg_having_frequent_customers",
+    "agg_percentiles_lineitem", "dedup_cross_source_overlap",
+    "dedup_decontaminate_bloom", "dedup_soft_dedup_weights",
+    "join_asof_tolerance_error", "join_point_in_time_scd2",
+    "join_temporal_validity_intersection", "pipeline_training_data_prep",
+    "quality_benford_first_digit", "quality_cross_field_violations",
+    "quality_k_anonymity_customers", "quality_mad_anomaly_events",
+    "reshape_denormalize_star", "reshape_union_schema_evolution",
+    "sample_balanced_labels", "sample_corpus_mixture",
+    "sample_stratified_split_embeddings", "scalar_array_suite",
+    "scalar_bitwise_suite", "scalar_nested_suite", "scalar_try_suite",
+    "sim_centroid_drift", "sim_centroid_outlier_filter",
     "sim_label_centroids", "sketch_heavy_hitters_event_types",
     "stats_gini_revenue_concentration", "stats_mann_whitney_value_drift",
     "stats_spearman_value_trend", "text_bpe_encode_fixed_vocab",
@@ -129,16 +129,16 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "dedup_token_budget_by_source", "join_asof_last_error",
     "join_full_outer_user_activity", "join_interval_overlap_orders",
     "join_range_value_bands", "layout_zorder_cells",
-    "multimodal_audio_energy", "multimodal_byte_histogram",
-    "multimodal_frame_sample", "multimodal_metadata",
-    "multimodal_resize_grid", "pipeline_corpus_curation",
-    "sample_deterministic_documents", "sample_split_documents",
-    "sample_stratified_events", "scalar_date_suite", "scalar_json_extract",
-    "scalar_string_suite", "setops_customer_cohorts", "sim_hard_negatives",
+    "pipeline_corpus_curation", "sample_deterministic_documents",
+    "sample_split_documents", "sample_stratified_events",
+    "scalar_date_suite", "scalar_json_extract", "scalar_string_suite",
+    "setops_customer_cohorts", "sim_hard_negatives",
     "sketch_distinct_overlap_users_exact", "sketch_histogram_quantiles",
     "sort_global_top10_orders", "stats_ab_welch_value", "text_fingerprints",
     "text_language_id", "text_quality_score", "text_token_stats",
-    "text_word_concentration", "tpch_q12_shipmode_priority",
+    "text_word_concentration", "tpch_q11_important_stock",
+    "tpch_q12_shipmode_priority", "tpch_q16_supplier_part_counts",
+    "tpch_q20_potential_promotion", "tpch_q2_min_cost_supplier",
     "ts_ccf_click_purchase", "ts_gap_fill_hourly", "ts_ingestion_staleness",
     "agg_rollup_orders", "agg_salted_events_by_type",
     "analytics_copurchase_pairs", "analytics_event_transitions",
@@ -152,11 +152,10 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "graph_pagerank_copurchase", "graph_triangle_participation",
     "join_anti_no_big_order", "join_asof_next_error",
     "join_semi_active_customers", "join_star_revenue",
-    "multimodal_container_probe", "profile_orders_columns",
-    "quality_key_skew_events", "quality_metrics_lineitem",
-    "quality_psi_value_drift", "quality_referential_integrity",
-    "reshape_pivot_event_types", "reshape_unpivot_measures",
-    "scalar_math_suite", "scalar_variant_json",
+    "profile_orders_columns", "quality_key_skew_events",
+    "quality_metrics_lineitem", "quality_psi_value_drift",
+    "quality_referential_integrity", "reshape_pivot_event_types",
+    "reshape_unpivot_measures", "scalar_math_suite", "scalar_variant_json",
     "scd2_apply_changes_incremental", "scd2_user_value_history",
     "sketch_distinct_users_rollup_exact", "text_chunk_documents",
     "text_pii_redaction", "text_tfidf_top_terms", "text_vocabulary_top100",
